@@ -215,14 +215,24 @@ final class GraftEngine(spark: SparkSession, corpus: DataFrame,
       // zero vector weight, exactly like search(alpha = 0, filters))
       graft.sources.TextIndex.filteredHybridServe(spark, path, terms,
         filters, alpha, limit, fusion)
-    else if (alpha > 0.0)
-      graft.sources.TextIndex.hybridServe(spark, path, terms, alpha,
-        limit, fusion)
     else
-      graft.sources.TextIndex.bm25Serve(spark, path, terms)
+      rankFromIndex(path, graft.sources.TextIndex.commitOf(spark, path),
+        terms, alpha, limit, fusion)
+  }
+
+  /** The unfiltered store ranking at commit `c`: hybrid-with-alpha,
+    * or the pure BM25 top-k at alpha = 0. */
+  private def rankFromIndex(path: String,
+                            c: graft.sources.TextIndex.Commit,
+                            terms: Seq[String], alpha: Double, limit: Int,
+                            fusion: String): DataFrame =
+    if (alpha > 0.0)
+      graft.sources.TextIndex.hybridServe(spark, path, c, terms, alpha,
+        limit, fusion, graft.sources.TextIndex.Candidates, Int.MaxValue)
+    else
+      graft.sources.TextIndex.bm25Serve(spark, path, c, terms)
         .orderBy(col("score").desc, col("doc_id")).limit(limit)
         .select(col("doc_id"), col("score"))
-  }
 
   /** Search + deterministic rerank served FROM the persisted index —
     * [[searchReranked]]'s store twin (retrieval/service.go:112-130:
@@ -245,35 +255,51 @@ final class GraftEngine(spark: SparkSession, corpus: DataFrame,
     * reference's rerank stage over the hits' stored-fields content,
     * service.go:112-130), render content + snippet per hit from the
     * index's STORED FIELDS (zero corpus access at query time), log
-    * to the session query log, return the rows. */
+    * to the session query log, return the rows in ranked order.
+    *
+    * The commit resolves ONCE: ranking, content and render all read
+    * that snapshot, so a commit landing mid-request cannot mix two
+    * index states into one response. The ≤k ranked rows are
+    * collected ONCE (the request/response boundary); the render's
+    * ids and its join both come from those rows, so the ranking
+    * never runs twice, and the render leaves no cache handle. */
   def runSearchFromIndex(path: String, query: String,
                          alpha: Double = settings.searchAlpha,
                          limit: Int = settings.searchTopK,
                          rerank: Boolean = false,
                          correlationId: String = ""): Seq[org.apache.spark.sql.Row] = {
+    import graft.sources.TextIndex
     val t0 = System.nanoTime()
     val terms = queryTermsOf(query)
+    require(terms.nonEmpty,
+      "runSearchFromIndex needs at least one query term")
+    val c = TextIndex.commitOf(spark, path)
     // rerank applies at EVERY alpha — the reference service reranks
     // whatever the store returned (service.go:112-130), BM25-only
     // results included; at alpha = 0 the hybrid candidates degrade
     // to the keyword leg and the rerank stage still reorders them
     val ranked =
-      if (rerank) searchRerankedFromIndex(path, query, alpha, limit)
-      else searchFromIndex(path, query, alpha, limit)
-    val order =
       if (rerank)
-        Seq(col("rerank_score").desc, col("hybrid_score").desc,
-          col("doc_id"))
-      else
-        Seq(col(if (alpha > 0.0) "hybrid_score" else "score").desc,
-          col("doc_id"))
-    val rows = graft.sources.TextIndex
-      .renderHits(spark, path, ranked, terms)
-      .orderBy(order: _*)
-      .collect().toSeq
+        TextIndex.rerankServe(spark, path, c, terms, alpha, limit,
+          "relative", TextIndex.Candidates, Int.MaxValue)
+      else rankFromIndex(path, c, terms, alpha, limit, "relative")
+    val hits = ranked.collect().toSeq
+    val rows = inHitOrder(hits, TextIndex
+      .renderHits(spark, path, c, hits, ranked.schema, terms, 10)
+      .collect().toSeq)
     queryLog.log(QueryLog.entry(query, rows.length,
       System.nanoTime() - t0, correlationId))
     rows
+  }
+
+  /** Rendered rows in the order of the collected hits they came from
+    * — the ranking's own order, kept on the driver instead of a
+    * second distributed sort of ≤k rows. */
+  private def inHitOrder(hits: Seq[org.apache.spark.sql.Row],
+                         rendered: Seq[org.apache.spark.sql.Row])
+      : Seq[org.apache.spark.sql.Row] = {
+    val at = hits.map(_.getAs[Long]("doc_id")).zipWithIndex.toMap
+    rendered.sortBy(r => at(r.getAs[Long]("doc_id")))
   }
 
   /** Serve a whole QUERY BATCH from the persisted index — the
@@ -562,7 +588,8 @@ final class GraftEngine(spark: SparkSession, corpus: DataFrame,
     * query-term coverage, s10's operator made corpus-generic; a
     * vector-only hit with no term occurrence falls back to the
     * document head). Snippet cost is O(k): only the top-k docs are
-    * re-tokenized, via a broadcast semi-join. */
+    * re-tokenized: the ranked rows are collected once and their
+    * docs read by an id filter (HybridSearch.snippetsOfHits). */
   def runSearch(query: String, alpha: Double = settings.searchAlpha,
                 limit: Int = settings.searchTopK,
                 filters: Map[String, String] = Map.empty,
@@ -570,9 +597,12 @@ final class GraftEngine(spark: SparkSession, corpus: DataFrame,
     val t0 = System.nanoTime()
     val terms = queryTermsOf(query)
     val ranked = search(query, alpha, limit, filters)
-    val rows = HybridSearch.snippetsOf(corpus, ranked, terms)
-      .orderBy(col("hybrid_score").desc, col("doc_id"))
-      .collect().toSeq
+    // ranked ONCE, like the store path: the render reads the
+    // collected ≤k rows, not the lazy ranking plan
+    val hits = ranked.collect().toSeq
+    val rows = inHitOrder(hits, HybridSearch
+      .snippetsOfHits(corpus, hits, ranked.schema, terms)
+      .collect().toSeq)
     queryLog.log(QueryLog.entry(query, rows.length,
       System.nanoTime() - t0, correlationId))
     rows

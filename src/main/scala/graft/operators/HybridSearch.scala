@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 import graft.Tables
 import graft.functions.{VectorFunctions => V}
 
@@ -511,18 +513,51 @@ object HybridSearch {
     * first `window` tokens with n_terms = 0 — the "return the chunk
     * text" behavior, never a dropped row. Only the ranked top-k docs
     * are tokenized (broadcast semi-join into the corpus scan), so
-    * serving cost is O(k), independent of corpus size. */
+    * serving cost is O(k), independent of corpus size. `ranked` stays
+    * lazy here and is evaluated by both the semi-join and the final
+    * join — the form for a ranking that is itself a query (s10); a
+    * serve that materializes its hits calls [[snippetsOfHits]]. */
   def snippetsOf(corpus: DataFrame, ranked: DataFrame,
                  terms: Seq[String], window: Int = 10): DataFrame = {
+    import corpus.sparkSession.implicits._
+    val docs = graft.Caches.persist(tokenizedHits(
+      corpus.join(broadcast(ranked.select($"doc_id")), "doc_id")))
+    windowed(docs, ranked, terms, window)
+  }
+
+  /** [[snippetsOf]] for a hit list the serve already COLLECTED (≤k
+    * rows — the request/response boundary, so the ranking runs
+    * exactly once): the hits' (doc_id, text) rows are read by one id
+    * filter and collected too, and the SAME windowing runs over the
+    * two driver-local relations — no ranking plan re-executes and no
+    * cache handle is left behind. */
+  private[graft] def snippetsOfHits(corpus: DataFrame, hits: Seq[Row],
+                                    schema: StructType, terms: Seq[String],
+                                    window: Int = 10): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val docs = graft.Caches.persist(
-      corpus
-        .join(broadcast(ranked.select($"doc_id")), "doc_id")
-        .select($"doc_id", $"text",
-          regexp_extract_all(lower($"text"), lit(WordTokenPattern), lit(0))
-            .as("tok")))
+    val id = schema.fieldIndex("doc_id")
+    val text = corpus.filter($"doc_id".isin(hits.map(_.getLong(id)): _*))
+      .select($"doc_id", $"text")
+    val docs = spark.createDataFrame(text.collect().toSeq.asJava, text.schema)
+    windowed(tokenizedHits(docs), spark.createDataFrame(hits.asJava, schema),
+      terms, window)
+  }
+
+  /** (doc_id, text, tok) of the hit documents. */
+  private def tokenizedHits(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.select($"doc_id", $"text",
+      regexp_extract_all(lower($"text"), lit(WordTokenPattern), lit(0))
+        .as("tok"))
+  }
+
+  /** The snippet windowing itself: candidate starts are query-term
+    * hit positions; the best `window`-token span per doc maximizes
+    * (distinct terms, hits), earliest start on ties. */
+  private def windowed(docs: DataFrame, ranked: DataFrame,
+                       terms: Seq[String], window: Int): DataFrame = {
+    import docs.sparkSession.implicits._
     val hits = docs
       .select($"doc_id", posexplode($"tok"))
       .filter($"col".isin(terms: _*))

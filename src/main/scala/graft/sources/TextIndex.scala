@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 import graft.operators.{HybridSearch, Knn}
 
@@ -90,6 +91,9 @@ object TextIndex {
     * space is 64-dim; a deployment retunes per corpus). */
   val VectorCells = 8
 
+  /** Candidates each hybrid leg contributes to the fusion. */
+  val Candidates = 50
+
   /** One committed index state: artifact version `seq`, live batch
     * range [minBatch, maxBatch], and the highest streaming epoch
     * folded in (−1 when the index was never stream-maintained). */
@@ -114,7 +118,7 @@ object TextIndex {
       Commit(p(0).toLong, p(1).toLong, p(2).toLong, p(3).toLong)
     }
 
-  private def commitOf(spark: SparkSession, path: String): Commit =
+  private[graft] def commitOf(spark: SparkSession, path: String): Commit =
     readCommit(spark, path).getOrElse(throw new IllegalArgumentException(
       s"no committed text index at $path"))
 
@@ -334,11 +338,15 @@ object TextIndex {
       .write.mode("overwrite").parquet(s"$path/vcents/v=$seq")
   }
 
+  /** The frozen quantizer at commit `c`, in cid order — ≤
+    * [[VectorCells]] rows collected and sorted on the driver (an
+    * `orderBy` would add a range-partitioning sample job per read). */
   private def readCents(spark: SparkSession, path: String,
                         c: Commit): Seq[Seq[Double]] = {
     import spark.implicits._
     spark.read.parquet(s"$path/vcents/v=${c.seq}")
-      .orderBy($"cid").select($"cv").as[Seq[Double]].collect().toSeq
+      .select($"cid", $"cv").as[(Int, Seq[Double])].collect()
+      .sortBy(_._1).map(_._2).toSeq
   }
 
   /** The committed `docs/` schema, persisted as a versioned ZERO-ROW
@@ -1030,11 +1038,13 @@ object TextIndex {
   /** The term-hash buckets of a bounded query-term list, computed
     * through the SAME expression the writer partitioned with (a
     * driver-side reimplementation could drift from Spark's
-    * xxhash64). */
+    * xxhash64). Terms and buckets dedupe on the driver: the
+    * projection over the local term relation then folds into a
+    * local relation, so the lookup runs no Spark job. */
   private def bucketsOf(spark: SparkSession, terms: Seq[String]): Seq[Long] = {
     import spark.implicits._
-    terms.toDF("term").select(pbucket($"term")).distinct()
-      .collect().map(_.getLong(0)).toSeq
+    terms.distinct.toDF("term").select(pbucket($"term"))
+      .collect().map(_.getLong(0)).distinct.toSeq
   }
 
   /** Load the query terms' live postings — batch range + bucket
@@ -1074,10 +1084,14 @@ object TextIndex {
     * stats row comes from vocab + the persisted counts, and the
     * SHARED scorer runs — bit-equal to HybridSearch.bm25Scores. */
   def bm25Serve(spark: SparkSession, path: String,
-                queryTerms: Seq[String]): DataFrame = {
+                queryTerms: Seq[String]): DataFrame =
+    bm25Serve(spark, path, commitOf(spark, path), queryTerms)
+
+  /** [[bm25Serve]] at a commit the caller already resolved. */
+  private[graft] def bm25Serve(spark: SparkSession, path: String, c: Commit,
+                               queryTerms: Seq[String]): DataFrame = {
     import spark.implicits._
     require(queryTerms.nonEmpty, "bm25Serve needs at least one query term")
-    val c = commitOf(spark, path)
     val tfCols = queryTerms.zipWithIndex.map { case (t, i) =>
       coalesce(sum(when($"term" === t, $"tf")), lit(0L)).cast("double")
         .as(s"tf_$i")
@@ -1245,11 +1259,17 @@ object TextIndex {
     * (partition-pruned, the IVF trade); `nprobe` ≥ cells is the exact
     * scan the s21 oracle replays. */
   def vectorServe(spark: SparkSession, path: String,
-                  queryTerms: Seq[String], candidates: Int = 50,
-                  nprobe: Int = Int.MaxValue): DataFrame = {
+                  queryTerms: Seq[String], candidates: Int = Candidates,
+                  nprobe: Int = Int.MaxValue): DataFrame =
+    vectorServe(spark, path, commitOf(spark, path), queryTerms, candidates,
+      nprobe)
+
+  /** [[vectorServe]] at a commit the caller already resolved. */
+  private[graft] def vectorServe(spark: SparkSession, path: String,
+                                 c: Commit, queryTerms: Seq[String],
+                                 candidates: Int, nprobe: Int): DataFrame = {
     import spark.implicits._
     graft.plans.GraftFunctions.ensureRegistered(spark)
-    val c = commitOf(spark, path)
     val cents = readCents(spark, path, c)
     val queryTok = array(queryTerms.map(lit): _*)
     val qvec = spark.range(1)
@@ -1279,15 +1299,24 @@ object TextIndex {
   def hybridServe(spark: SparkSession, path: String,
                   queryTerms: Seq[String], alpha: Double = 0.5,
                   limit: Int = 10, fusion: String = "relative",
-                  candidates: Int = 50,
-                  nprobe: Int = Int.MaxValue): DataFrame = {
+                  candidates: Int = Candidates,
+                  nprobe: Int = Int.MaxValue): DataFrame =
+    hybridServe(spark, path, commitOf(spark, path), queryTerms, alpha, limit,
+      fusion, candidates, nprobe)
+
+  /** [[hybridServe]] at a commit the caller already resolved — both
+    * legs read that one commit. */
+  private[graft] def hybridServe(spark: SparkSession, path: String,
+                                 c: Commit, queryTerms: Seq[String],
+                                 alpha: Double, limit: Int, fusion: String,
+                                 candidates: Int, nprobe: Int): DataFrame = {
     import spark.implicits._
     require(fusion == "relative" || fusion == "ranked",
       s"fusion must be 'relative' or 'ranked', got '$fusion'")
-    val kw = bm25Serve(spark, path, queryTerms)
+    val kw = bm25Serve(spark, path, c, queryTerms)
       .orderBy($"score".desc, $"doc_id").limit(candidates)
       .select($"doc_id", $"score".as("kw_score"))
-    val vec = vectorServe(spark, path, queryTerms, candidates, nprobe)
+    val vec = vectorServe(spark, path, c, queryTerms, candidates, nprobe)
     if (fusion == "ranked") HybridSearch.fuseRanked(kw, vec, alpha, limit)
     else HybridSearch.fuseRelative(kw, vec, alpha, limit)
   }
@@ -1311,7 +1340,7 @@ object TextIndex {
                           filters: Map[String, String],
                           alpha: Double = 0.5, limit: Int = 10,
                           fusion: String = "relative",
-                          candidates: Int = 50,
+                          candidates: Int = Candidates,
                           nprobe: Int = Int.MaxValue): DataFrame = {
     import spark.implicits._
     require(fusion == "relative" || fusion == "ranked",
@@ -1532,20 +1561,34 @@ object TextIndex {
   /** RENDER a ranked hit list from the STORED FIELDS — the
     * SearchResult.Content contract (retrieval/service.go:11,114-120:
     * every hit returns chunk content to the client and the reranker)
-    * served without the corpus: the top-k ids become dbucket
-    * partition filters + doc_id row-group pushdown on `content/`
-    * (≤k rows read), then the SHARED snippet windowing runs
-    * (HybridSearch.snippetsOf — best `window`-token span of query-
-    * term coverage, head fallback for vector-only hits). `ranked`
-    * must carry doc_id; all its columns ride through. The id
-    * collect is k-bounded — the request/response boundary, same as
-    * the query-term bucket hashes. */
+    * served without the corpus. `ranked` must carry doc_id; all its
+    * columns ride through. It is collected ONCE — ≤k rows, the
+    * request/response boundary — and both the content lookup's ids
+    * and the render join read those rows, so the ranking plan never
+    * runs a second time. The commit resolves once, here; a serve that
+    * already ranked at a commit calls the commit-pinned overload
+    * below, so its hits render from the snapshot that ranked them. */
   def renderHits(spark: SparkSession, path: String, ranked: DataFrame,
-                 queryTerms: Seq[String], window: Int = 10): DataFrame = {
-    import spark.implicits._
-    val ids = ranked.select($"doc_id").collect().map(_.getLong(0)).toSeq
-    val content = contentForIds(spark, path, commitOf(spark, path), ids)
-    HybridSearch.snippetsOf(content, ranked, queryTerms, window)
+                 queryTerms: Seq[String], window: Int = 10): DataFrame =
+    renderHits(spark, path, commitOf(spark, path), ranked.collect().toSeq,
+      ranked.schema, queryTerms, window)
+
+  /** [[renderHits]] for ≤k hit rows already collected at commit `c`:
+    * their ids become dbucket partition filters + doc_id row-group
+    * pushdown on `content/` at that same commit (≤k rows read), then
+    * the SHARED snippet windowing (HybridSearch.snippetsOfHits — best
+    * `window`-token span of query-term coverage, head fallback for
+    * vector-only hits) runs over driver-local relations: no second
+    * ranking, no cache handle left behind. */
+  private[graft] def renderHits(spark: SparkSession, path: String, c: Commit,
+                                hits: Seq[Row],
+                                schema: org.apache.spark.sql.types.StructType,
+                                queryTerms: Seq[String],
+                                window: Int): DataFrame = {
+    val id = schema.fieldIndex("doc_id")
+    HybridSearch.snippetsOfHits(
+      contentForIds(spark, path, c, hits.map(_.getLong(id))),
+      hits, schema, queryTerms, window)
   }
 
   /** The ≤|ids| live stored-fields rows for a ranked hit list —
@@ -1578,8 +1621,19 @@ object TextIndex {
   def rerankServe(spark: SparkSession, path: String,
                   queryTerms: Seq[String], alpha: Double = 0.5,
                   limit: Int = 10, fusion: String = "relative",
-                  candidates: Int = 50,
-                  nprobe: Int = Int.MaxValue): DataFrame = {
+                  candidates: Int = Candidates,
+                  nprobe: Int = Int.MaxValue): DataFrame =
+    rerankServe(spark, path, commitOf(spark, path), queryTerms, alpha, limit,
+      fusion, candidates, nprobe)
+
+  /** [[rerankServe]] at a commit the caller already resolved: the
+    * candidates rank at `c` and are collected once (≤`limit` rows);
+    * their ids and the rerank join both read those rows, and their
+    * content reads at the same `c`. */
+  private[graft] def rerankServe(spark: SparkSession, path: String,
+                                 c: Commit, queryTerms: Seq[String],
+                                 alpha: Double, limit: Int, fusion: String,
+                                 candidates: Int, nprobe: Int): DataFrame = {
     import spark.implicits._
     // the service reranks whatever the store SEARCH returned
     // (service.go:112-130); at alpha = 0 that is the BM25 leg alone —
@@ -1588,10 +1642,10 @@ object TextIndex {
     // limit and be reranked above genuine keyword hits
     val ranked0 =
       if (alpha > 0.0)
-        hybridServe(spark, path, queryTerms, alpha, limit, fusion,
+        hybridServe(spark, path, c, queryTerms, alpha, limit, fusion,
           candidates, nprobe)
       else {
-        val kw = bm25Serve(spark, path, queryTerms)
+        val kw = bm25Serve(spark, path, c, queryTerms)
           .orderBy($"score".desc, $"doc_id").limit(candidates)
           .select($"doc_id", $"score".as("kw_score"))
         val emptyVec = spark.range(0)
@@ -1606,12 +1660,15 @@ object TextIndex {
       }
     // fuseRanked names its fused column rrf_score; the rerank stage
     // (and the returned schema) reads one canonical hybrid_score
-    val cands = (if (fusion == "ranked")
+    val ranked = if (fusion == "ranked")
         ranked0.withColumnRenamed("rrf_score", "hybrid_score")
-      else ranked0)
-      .localCheckpoint(true) // ranked once; read for ids AND the join
-    val ids = cands.select($"doc_id").collect().map(_.getLong(0)).toSeq
-    val toks = contentForIds(spark, path, commitOf(spark, path), ids)
+      else ranked0
+    // ranked ONCE: the ≤limit candidate rows, read for the ids AND
+    // the join as a driver-local relation
+    val rows = ranked.collect().toSeq
+    val cands = spark.createDataFrame(rows.asJava, ranked.schema)
+    val id = ranked.schema.fieldIndex("doc_id")
+    val toks = contentForIds(spark, path, c, rows.map(_.getLong(id)))
       .select($"doc_id",
         regexp_extract_all(lower($"text"),
           lit(HybridSearch.WordTokenPattern), lit(0)).as("tok"))
@@ -1624,15 +1681,18 @@ object TextIndex {
   /** s10 served FROM the index: s1's ranking through [[bm25Serve]]
     * and the snippets rendered from the stored fields — the full
     * "query in, renderable results out" serving call with zero
-    * corpus access. */
+    * corpus access. One commit serves both: the top-k rank at it,
+    * are collected once, and render from its stored fields. */
   def snippetServe(spark: SparkSession, path: String,
                    queryTerms: Seq[String], k: Int = 10,
                    window: Int = 10): DataFrame = {
     import spark.implicits._
-    val top = bm25Serve(spark, path, queryTerms)
+    val c = commitOf(spark, path)
+    val top = bm25Serve(spark, path, c, queryTerms)
       .orderBy($"score".desc, $"doc_id").limit(k)
       .select($"doc_id", $"score")
-    renderHits(spark, path, top, queryTerms, window)
+    renderHits(spark, path, c, top.collect().toSeq, top.schema, queryTerms,
+        window)
       .select($"doc_id", $"score", $"start_pos", $"n_terms", $"snippet")
       .orderBy($"score".desc, $"doc_id")
   }
@@ -1697,7 +1757,7 @@ object TextIndex {
                        queries: Seq[(Long, Seq[String])],
                        alpha: Double = 0.5, limit: Int = 10,
                        fusion: String = "relative",
-                       candidates: Int = 50,
+                       candidates: Int = Candidates,
                        nprobe: Int = Int.MaxValue): DataFrame = {
     import spark.implicits._
     require(fusion == "relative" || fusion == "ranked",

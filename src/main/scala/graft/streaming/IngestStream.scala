@@ -364,8 +364,11 @@ object IngestStream {
   /** STREAMING CDC maintenance — result_consumer.go:196-198's loop
     * as a stream, closing the c18 change classes against the
     * persisted index END TO END: each micro-batch carries crawl
-    * RESULTS — (doc_id, text) page fetches plus (doc_id, NULL)
-    * delete notices. The epoch classifies arriving pages against the
+    * RESULTS — (doc_id, text, metadata…) page fetches plus
+    * (doc_id, NULL) delete notices; metadata columns (source, url…)
+    * land in the index's `docs/` side table with every built or
+    * upserted page, so store-served filters and counts see them. The
+    * epoch classifies arriving pages against the
     * index's OWN stored fields (WebMeta.changeDetect on content
     * hashes, the needs_processing gate — an unchanged re-crawl
     * re-ingests NOTHING), then applies the changed/new upserts AND
@@ -380,7 +383,10 @@ object IngestStream {
     val syncEpoch: (DataFrame, Long) => Unit = (batch, epochId) => {
       val spark = batch.sparkSession
       import spark.implicits._
-      val b = batch.select("doc_id", "text")
+      // every column rides: extra ones (source, url…) are page
+      // metadata the build and the upsert persist in `docs/`; a
+      // delete notice needs only its doc_id
+      val b = batch
       if (!graft.sources.TextIndex.exists(spark, indexPath)) {
         // delete wins inside the epoch: a page fetched AND deleted in
         // the same first batch must not land in the fresh index (the

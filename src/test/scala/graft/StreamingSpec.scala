@@ -1621,6 +1621,40 @@ class StreamingSpec extends SparkSpec {
     assert(Knn.storeLastEpoch(spark, root) == 1L)
   }
 
+  test("CDC sync stream keeps page metadata: built, changed and new pages carry their source") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.sources.TextIndex
+
+    val idx = java.nio.file.Files
+      .createTempDirectory("graft-ti-sync-meta").toString + "/index"
+    val stream = MemoryStream[(Long, String, String)]
+    val query = IngestStream.syncIndexStream(
+      stream.toDF().toDF("doc_id", "text", "source"), idx)
+    try {
+      stream.addData((1L, "spark joins filter tables", "sA"),
+        (2L, "old text of page two", "sB"))
+      query.processAllAvailable()
+      // page 1 re-crawls unchanged, page 2 changed, page 3 is new
+      stream.addData((1L, "spark joins filter tables", "sA"),
+        (2L, "the quick brown fox joins the lazy dog", "sB"),
+        (3L, "filter spark filter join join join", "sA"))
+      query.processAllAvailable()
+      // a delete notice carries no metadata
+      stream.addData((1L, null.asInstanceOf[String], null.asInstanceOf[String]))
+      query.processAllAvailable()
+    } finally query.stop()
+    val counts = TextIndex.countChunksServe(spark, idx, "source")
+      .collect().map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
+    assert(counts == Map(Some("sA") -> 1L, Some("sB") -> 1L),
+      s"every live page must keep its source, got $counts")
+    assert(TextIndex.docsTable(spark, idx)
+      .select($"doc_id", $"source").orderBy($"doc_id").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq((2L, "sB"), (3L, "sA")))
+  }
+
   test("CDC sync stream: delete wins inside the first build epoch") {
     val sparkSession = spark
     import sparkSession.implicits._
