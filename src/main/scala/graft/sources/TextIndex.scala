@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
+  IntegerType, LongType, StringType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 
 import graft.operators.{HybridSearch, Knn}
@@ -59,6 +61,13 @@ import graft.operators.{HybridSearch, Knn}
   *    SMALL artifacts, rewritten as a fresh version per commit
   *    (vocab cardinality — Heaps' law — so the rewrite stays tiny at
   *    any corpus size) and resolved through the marker's `seq`.
+  *
+  * Reads open an artifact without a Spark job ([[readArtifact]]):
+  * each artifact's schema is declared beside its writer, so no footer
+  * is inferred, and a batch-partitioned read names only the committed
+  * `batch=B` directories — pruned to the query's bucket directories
+  * where it has them — so superseded batch directories are never
+  * listed, however many commits left them behind.
   *
   * DELETE is logical: a tombstone (doc_id, upto_batch=maxBatch at
   * delete time) kills the document's rows in every batch ≤ upto while
@@ -238,6 +247,27 @@ object TextIndex {
 
   // -------------------------------------------------- batch writes --
 
+  // The read schema of each artifact is declared beside its writer:
+  // the types the writer produces, with the partition columns typed
+  // as partition discovery infers them (int), so a declared read
+  // resolves exactly what footer inference did.
+  private def fieldsOf(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) => StructField(n, t) })
+
+  private val PostingsSchema = fieldsOf("term" -> StringType,
+    "doc_id" -> LongType, "dl" -> DoubleType, "tf" -> LongType,
+    "pos" -> ArrayType(IntegerType), "batch" -> IntegerType,
+    "pbucket" -> IntegerType)
+
+  private val FieldedSchema = fieldsOf("term" -> StringType,
+    "doc_id" -> LongType, "nlt" -> LongType, "nlb" -> LongType,
+    "tt" -> LongType, "bt" -> LongType, "batch" -> IntegerType,
+    "pbucket" -> IntegerType)
+
+  private val ForwardSchema = fieldsOf("doc_id" -> LongType,
+    "term" -> StringType, "tf" -> LongType, "batch" -> IntegerType,
+    "dbucket" -> IntegerType)
+
   /** Stage one batch's worth of the four batch-partitioned text
     * artifacts. `dynamic` = replace only this batch's partitions
     * (append/replay); false = wipe the whole artifact (fresh build).
@@ -279,6 +309,9 @@ object TextIndex {
         "docs", Seq("dbucket")))
   }
 
+  private val ContentSchema = fieldsOf("doc_id" -> LongType,
+    "text" -> StringType, "batch" -> IntegerType, "dbucket" -> IntegerType)
+
   /** Write one batch of STORED FIELDS — the raw (doc_id, text) rows,
     * dbucket-partitioned (Lucene's stored-fields file): what lets the
     * index render SearchResult.Content + snippets per hit
@@ -298,6 +331,10 @@ object TextIndex {
       .partitionBy("batch", "dbucket")
       .parquet(s"$path/content")
   }
+
+  private val VectorsSchema = fieldsOf("doc_id" -> LongType,
+    "v" -> ArrayType(DoubleType), "batch" -> IntegerType,
+    "cid" -> IntegerType)
 
   /** Assign + write one batch of document vectors against the frozen
     * quantizer (the production IVF add() contract — append never
@@ -325,10 +362,27 @@ object TextIndex {
                              seq: Long): Unit =
     df.write.mode("overwrite").parquet(s"$path/$name/v=$seq")
 
+  // the versioned artifacts [[write]] and [[applyChange]] stage:
+  // vocab (a per-term count), the ranked completion table, the exact
+  // corpus sums, the tombstone list
+  private val VocabSchema = fieldsOf("term" -> StringType, "df" -> LongType)
+
+  private val PrefixesSchema = fieldsOf("prefix" -> StringType,
+    "rank" -> LongType, "term" -> StringType, "df" -> LongType)
+
+  private val StatsSchema = fieldsOf("n_docs" -> LongType,
+    "sum_dl" -> DoubleType, "slt" -> LongType, "slb" -> LongType)
+
+  private val TombstonesSchema = fieldsOf("doc_id" -> LongType,
+    "upto_batch" -> LongType)
+
   private def emptyTombstones(spark: SparkSession): DataFrame = {
     import spark.implicits._
     Seq.empty[(Long, Long)].toDF("doc_id", "upto_batch")
   }
+
+  private val VcentsSchema = fieldsOf("cid" -> IntegerType,
+    "cv" -> ArrayType(DoubleType))
 
   private def writeCents(spark: SparkSession, path: String, seq: Long,
                          cents: Seq[Seq[Double]]): Unit = {
@@ -344,7 +398,7 @@ object TextIndex {
   private def readCents(spark: SparkSession, path: String,
                         c: Commit): Seq[Seq[Double]] = {
     import spark.implicits._
-    spark.read.parquet(s"$path/vcents/v=${c.seq}")
+    readArtifact(spark, path, "vcents", c)
       .select($"cid", $"cv").as[(Int, Seq[Double])].collect()
       .sortBy(_._1).map(_._2).toSeq
   }
@@ -414,6 +468,17 @@ object TextIndex {
         s"reserved index bookkeeping names " +
         s"${ReservedCorpusCols.toSeq.sorted.mkString(", ")} — rename " +
         "them before indexing")
+    // the declared artifact schemas, and every served row's doc_id
+    // read, fix these two types: a corpus of other types would build
+    // and then fail its first serve
+    for ((name, want) <- Seq("doc_id" -> LongType, "text" -> StringType)) {
+      val got = corpus.schema.find(_.name.equalsIgnoreCase(name))
+        .map(_.dataType)
+      require(got.contains(want),
+        s"corpus column '$name' must be ${want.sql.toLowerCase}, got " +
+          got.fold("no such column")(_.sql.toLowerCase) +
+          " — cast it before indexing")
+    }
   }
 
   /** Build the full index from a (doc_id, text, metadata…) corpus —
@@ -555,13 +620,11 @@ object TextIndex {
     val deadDbs = ids.map(_.select(dbucket($"doc_id")).distinct()
       .collect().map(_.getLong(0)).toSeq)
     val deadFwd = ids.map { i =>
-      forwardLive(spark, path, c)
-        .filter($"dbucket".isin(deadDbs.get: _*))
+      liveOf(spark, path, "forward", c, deadDbs)
         .join(broadcast(i), "doc_id").persist()
     }
     val deadDocs = ids.map { i =>
-      docsLive(spark, path, c)
-        .filter($"dbucket".isin(deadDbs.get: _*))
+      liveOf(spark, path, "docs", c, deadDbs)
         .join(broadcast(i), "doc_id")
         .select($"doc_id", $"dl", $"nlt", $"nlb")
     }
@@ -572,7 +635,7 @@ object TextIndex {
     // METADATA SCHEMA EVOLUTION (vector/schema.go EnsureSchema's
     // AddProperty): a batch may carry NEW metadata columns — the
     // committed schema widens and older batches read them as NULL
-    // (the explicit-schema read in readBatched); a batch may OMIT
+    // (the explicit-schema read in readArtifact); a batch may OMIT
     // known columns — its rows read them as NULL the same way. A
     // column re-arriving under a DIFFERENT type is the one illegal
     // shape (Weaviate rejects property type changes too).
@@ -593,7 +656,7 @@ object TextIndex {
     // with this change's deletes already applied, and the compact-
     // style one-file-per-bucket write into the consolidated batch
     def oldLive(name: String): DataFrame =
-      liveRows(readBatched(spark, path, name, c), tomb2).drop("batch")
+      liveRows(readArtifact(spark, path, name, c), tomb2).drop("batch")
     def outConsolidated(df: DataFrame, name: String,
                         bucketCol: String): Unit =
       df.withColumn("batch", lit(newBatch))
@@ -731,7 +794,7 @@ object TextIndex {
         // the append cost is batch-vocabulary-sized, not
         // corpus-vocabulary-sized.
         () => {
-          val oldVocab = spark.read.parquet(s"$path/vocab/v=${c.seq}")
+          val oldVocab = readArtifact(spark, path, "vocab", c)
           val inc = addPost.map(_.groupBy($"term")
             .agg(count(lit(1)).as("df")))
           val dec = deadFwd.map(_.groupBy($"term")
@@ -767,8 +830,7 @@ object TextIndex {
                 .filter($"rank" <= kComplete)
                 .select($"prefix", $"rank".cast("long").as("rank"),
                   $"term", $"df")
-              val oldPrefixes =
-                spark.read.parquet(s"$path/prefixes/v=${c.seq}")
+              val oldPrefixes = readArtifact(spark, path, "prefixes", c)
               writeVersioned(
                 oldPrefixes.join(broadcast(affected), Seq("prefix"),
                     "left_anti")
@@ -779,7 +841,7 @@ object TextIndex {
 
         // ---- stats: exact integer-valued sums add and subtract
         () => {
-          val oldStats = spark.read.parquet(s"$path/stats/v=${c.seq}")
+          val oldStats = readArtifact(spark, path, "stats", c)
           val incStats = toks.map(batchStatsOf)
           val decStats = deadDocs.map(_.agg(
             (count(lit(1)) * -1L).as("n_docs"),
@@ -979,9 +1041,83 @@ object TextIndex {
 
   // --------------------------------------------------- live reads --
 
+  /** The bucket partition column of each batch-partitioned artifact
+    * (`name/batch=B/<col>=K/`); every other artifact is versioned
+    * (`name/v=seq`). */
+  private val BucketColOf = Map("postings" -> "pbucket",
+    "fielded" -> "pbucket", "forward" -> "dbucket", "docs" -> "dbucket",
+    "content" -> "dbucket", "vectors" -> "cid")
+
+  private val DeclaredSchemas = Map("postings" -> PostingsSchema,
+    "fielded" -> FieldedSchema, "forward" -> ForwardSchema,
+    "content" -> ContentSchema, "vectors" -> VectorsSchema,
+    "vocab" -> VocabSchema, "prefixes" -> PrefixesSchema,
+    "stats" -> StatsSchema, "tombstones" -> TombstonesSchema,
+    "vcents" -> VcentsSchema)
+
+  /** The ONE way an artifact opens at commit `c` — lazily, and with
+    * no Spark job:
+    *  - the schema is declared ([[DeclaredSchemas]]), so no
+    *    footer-inference job runs; `docs` applies its committed
+    *    schema, so batches written before a metadata column evolved
+    *    into the index read it as NULL;
+    *  - a versioned artifact reads `name/v=seq`;
+    *  - a batch-partitioned artifact names only the live
+    *    `name/batch=B` directories, B in [minBatch, maxBatch], so
+    *    superseded batches are never listed; given `buckets`, only
+    *    those bucket directories under them. Only directories that
+    *    exist are named (driver-side exists probes, one glob per
+    *    batch), with `basePath` so `batch` and the bucket column still
+    *    resolve as partition columns, and the batch-range and bucket
+    *    filters stay on the plan as partition filters.
+    * Spark lists more than `parallelPartitionDiscoveryThreshold`
+    * paths — or subdirectories of one directory — with a distributed
+    * job, so a pbucket artifact ([[TermBuckets]] subdirectories per
+    * batch) always opens at its bucket directories, and the named
+    * directories are read in groups of at most that many, unioned.
+    * No live directory gives an empty frame of the schema. */
+  private[graft] def readArtifact(spark: SparkSession, path: String,
+                                  name: String, c: Commit,
+                                  buckets: Option[Seq[Long]] = None)
+      : DataFrame = {
+    import org.apache.hadoop.fs.Path
+    val root = s"$path/$name"
+    val schema =
+      if (name == "docs") docsSchemaOf(spark, path, c) else DeclaredSchemas(name)
+    val bucketCol = BucketColOf.get(name)
+    val (base, dirs) = bucketCol match {
+      case None => (s"$root/v=${c.seq}", Seq(s"$root/v=${c.seq}"))
+      case Some(bc) =>
+        val (fs, _) = hadoop(spark, path)
+        val batchDirs =
+          (c.minBatch to c.maxBatch).map(b => new Path(s"$root/batch=$b"))
+        val named = buckets match {
+          case Some(ks) =>
+            for (b <- batchDirs; k <- ks.distinct) yield new Path(b, s"$bc=$k")
+          case None if bc == "pbucket" =>
+            batchDirs.flatMap(b =>
+              Option(fs.globStatus(new Path(b, s"$bc=*"))).toSeq.flatten
+                .filter(_.isDirectory).map(_.getPath))
+          case None => batchDirs
+        }
+        (root, named.filter(fs.exists).map(_.toString))
+    }
+    val read =
+      if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+      else dirs
+        .grouped(spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
+        .map(g => spark.read.schema(schema).option("basePath", base)
+          .parquet(g: _*))
+        .reduce(_ union _)
+    bucketCol.fold(read) { bc =>
+      val inRange = read.filter(col("batch").between(c.minBatch, c.maxBatch))
+      buckets.fold(inRange)(ks => inRange.filter(col(bc).isin(ks: _*)))
+    }
+  }
+
   private def tombstonesOf(spark: SparkSession, path: String,
                            c: Commit): DataFrame =
-    spark.read.parquet(s"$path/tombstones/v=${c.seq}")
+    readArtifact(spark, path, "tombstones", c)
 
   /** Tombstone semantics: a row (from partition `batch`) is live iff
     * no tombstone for its doc_id covers that batch. Broadcast left
@@ -994,40 +1130,30 @@ object TextIndex {
       .drop("upto_batch")
   }
 
-  private def readBatched(spark: SparkSession, path: String, name: String,
-                          c: Commit): DataFrame = {
-    import spark.implicits._
-    val r =
-      if (name == "docs")
-        // the COMMITTED schema applies explicitly: batches written
-        // before a metadata column evolved into the index read it as
-        // NULL (parquet's missing-column contract), and the plan
-        // never pays per-query mergeSchema footer reads
-        spark.read.schema(docsSchemaOf(spark, path, c))
-          .parquet(s"$path/docs")
-      else spark.read.parquet(s"$path/$name")
-    r.filter($"batch".between(c.minBatch, c.maxBatch))
-  }
+  /** The live rows of a batch-partitioned artifact at `c` —
+    * optionally only its `buckets` — with the tombstones applied. */
+  private def liveOf(spark: SparkSession, path: String, name: String,
+                     c: Commit, buckets: Option[Seq[Long]] = None): DataFrame =
+    liveRows(readArtifact(spark, path, name, c, buckets),
+      tombstonesOf(spark, path, c))
 
   private[graft] def forwardLive(spark: SparkSession, path: String,
                                  c: Commit): DataFrame =
-    liveRows(readBatched(spark, path, "forward", c),
-      tombstonesOf(spark, path, c))
+    liveOf(spark, path, "forward", c)
 
   private[graft] def docsLive(spark: SparkSession, path: String,
                               c: Commit): DataFrame =
-    liveRows(readBatched(spark, path, "docs", c),
-      tombstonesOf(spark, path, c))
+    liveOf(spark, path, "docs", c)
 
   // accessor views for specs/tools — resolved at the current commit
   def vocabTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/vocab/v=${commitOf(spark, path).seq}")
+    readArtifact(spark, path, "vocab", commitOf(spark, path))
 
   def statsTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/stats/v=${commitOf(spark, path).seq}")
+    readArtifact(spark, path, "stats", commitOf(spark, path))
 
   def prefixesTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/prefixes/v=${commitOf(spark, path).seq}")
+    readArtifact(spark, path, "prefixes", commitOf(spark, path))
 
   def forwardTable(spark: SparkSession, path: String): DataFrame =
     forwardLive(spark, path, commitOf(spark, path))
@@ -1053,11 +1179,8 @@ object TextIndex {
   private def postingsFor(spark: SparkSession, path: String,
                           terms: Seq[String], c: Commit): DataFrame = {
     import spark.implicits._
-    liveRows(
-      readBatched(spark, path, "postings", c)
-        .filter($"pbucket".isin(bucketsOf(spark, terms): _*) &&
-          $"term".isin(terms: _*)),
-      tombstonesOf(spark, path, c))
+    liveOf(spark, path, "postings", c, Some(bucketsOf(spark, terms)))
+      .filter($"term".isin(terms: _*))
   }
 
   /** One-row (df_0.., <stats cols>) frame for the query terms: df
@@ -1070,11 +1193,10 @@ object TextIndex {
       coalesce(max(when($"term" === t, $"df")), lit(0L)).cast("double")
         .as(s"df_$i")
     }
-    val vocabDf = spark.read.parquet(s"$path/vocab/v=${c.seq}")
+    val vocabDf = readArtifact(spark, path, "vocab", c)
       .filter($"term".isin(terms: _*))
       .agg(dfCols.head, dfCols.tail: _*)
-    vocabDf.crossJoin(
-      extra(spark.read.parquet(s"$path/stats/v=${c.seq}")))
+    vocabDf.crossJoin(extra(readArtifact(spark, path, "stats", c)))
   }
 
   // ------------------------------------------------------- serving --
@@ -1119,11 +1241,9 @@ object TextIndex {
       coalesce(sum(when($"term" === t, $"bt")), lit(0L)).cast("double")
         .as(s"bt_$i"))
     }
-    val base = liveRows(
-        readBatched(spark, path, "fielded", c)
-          .filter($"pbucket".isin(bucketsOf(spark, queryTerms): _*) &&
-            $"term".isin(queryTerms: _*)),
-        tombstonesOf(spark, path, c))
+    val base = liveOf(spark, path, "fielded", c,
+        Some(bucketsOf(spark, queryTerms)))
+      .filter($"term".isin(queryTerms: _*))
       .groupBy($"doc_id", $"nlt", $"nlb")
       .agg(tfCols.head, tfCols.tail: _*)
     val stats = statsFor(spark, path, queryTerms, c, s =>
@@ -1178,8 +1298,8 @@ object TextIndex {
     }
     val metaCols = meta.columns.filterNot(InternalDocCols)
     meta.select($"doc_id" +: metaCols.map(col): _*)
-      .join(liveRows(readBatched(spark, path, "content", c),
-        tombstonesOf(spark, path, c)).select($"doc_id", $"text"), "doc_id")
+      .join(liveOf(spark, path, "content", c).select($"doc_id", $"text"),
+        "doc_id")
   }
 
   /** One KEYSET PAGE of store-served chunks — GetChunks(sourceID,
@@ -1200,8 +1320,8 @@ object TextIndex {
     val page = after.fold(meta)(a => meta.filter($"doc_id" > a))
       .select($"doc_id" +: metaCols.map(col): _*)
       .orderBy($"doc_id").limit(limit)
-    page.join(liveRows(readBatched(spark, path, "content", c),
-        tombstonesOf(spark, path, c)).select($"doc_id", $"text"), "doc_id")
+    page.join(liveOf(spark, path, "content", c).select($"doc_id", $"text"),
+        "doc_id")
       .orderBy($"doc_id")
   }
 
@@ -1232,8 +1352,7 @@ object TextIndex {
                                cents: Seq[Seq[Double]],
                                nprobe: Int): DataFrame = {
     import spark.implicits._
-    val cells0 = readBatched(spark, path, "vectors", c)
-    if (nprobe >= cents.length) cells0
+    if (nprobe >= cents.length) readArtifact(spark, path, "vectors", c)
     else {
       // (−score, index) ascending = score desc, index ASC on ties —
       // the same first-max tie-break assign() writes cells with, so
@@ -1247,8 +1366,8 @@ object TextIndex {
           (s, i) => Knn.probeKey(s, i))), 1, nprobe)).as("pr"))
         .select($"pr"("i"))
         .distinct()
-        .collect().map(_.getInt(0)).toSeq
-      cells0.filter($"cid".isin(probed: _*))
+        .collect().map(_.getInt(0).toLong).toSeq
+      readArtifact(spark, path, "vectors", c, Some(probed))
     }
   }
 
@@ -1412,7 +1531,7 @@ object TextIndex {
     import spark.implicits._
     val uniq = terms.distinct
     val post = postingsFor(spark, path, uniq, c)
-    val dfs = spark.read.parquet(s"$path/vocab/v=${c.seq}")
+    val dfs = readArtifact(spark, path, "vocab", c)
       .filter($"term".isin(uniq: _*))
       .select($"term", $"df".cast("long"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1513,12 +1632,12 @@ object TextIndex {
                         nTerms: Int = 5, k: Int = 10): DataFrame = {
     import spark.implicits._
     val c = commitOf(spark, path)
-    val seedTf = forwardLive(spark, path, c)
-      .filter($"dbucket" === dbucketOf(seedId) && $"doc_id" === seedId)
+    val seedTf = liveOf(spark, path, "forward", c, Some(Seq(dbucketOf(seedId))))
+      .filter($"doc_id" === seedId)
       .select($"term", $"tf".as("tf_seed"))
-    val nDocs = spark.read.parquet(s"$path/stats/v=${c.seq}")
+    val nDocs = readArtifact(spark, path, "stats", c)
       .select($"n_docs".cast("double").as("n_docs"))
-    val terms = spark.read.parquet(s"$path/vocab/v=${c.seq}")
+    val terms = readArtifact(spark, path, "vocab", c)
       .join(broadcast(seedTf), "term")
       .crossJoin(broadcast(nDocs))
       .select($"term", ($"tf_seed" * log($"n_docs" / $"df")).as("escore"))
@@ -1535,8 +1654,7 @@ object TextIndex {
 
   /** Stored-fields view at the current commit (doc_id, text). */
   def contentTable(spark: SparkSession, path: String): DataFrame =
-    liveRows(readBatched(spark, path, "content", commitOf(spark, path)),
-      tombstonesOf(spark, path, commitOf(spark, path)))
+    liveOf(spark, path, "content", commitOf(spark, path))
 
   /** The stored-fields rows of an id SET (DataFrame form — the CDC
     * stream's change-detect read, where the batch can be too large
@@ -1551,9 +1669,7 @@ object TextIndex {
     val idCol = ids.select($"doc_id")
     val dbs = idCol.select(dbucket($"doc_id").as("db")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    liveRows(readBatched(spark, path, "content", c)
-        .filter($"dbucket".isin(dbs: _*)),
-      tombstonesOf(spark, path, c))
+    liveOf(spark, path, "content", c, Some(dbs))
       .join(idCol, Seq("doc_id"), "left_semi")
       .select($"doc_id", $"text")
   }
@@ -1598,11 +1714,8 @@ object TextIndex {
   private def contentForIds(spark: SparkSession, path: String,
                             c: Commit, ids: Seq[Long]): DataFrame = {
     import spark.implicits._
-    val dbs = ids.map(dbucketOf).distinct
-    liveRows(
-        readBatched(spark, path, "content", c)
-          .filter($"dbucket".isin(dbs: _*) && $"doc_id".isin(ids: _*)),
-        tombstonesOf(spark, path, c))
+    liveOf(spark, path, "content", c, Some(ids.map(dbucketOf)))
+      .filter($"doc_id".isin(ids: _*))
       .select($"doc_id", $"text")
   }
 
@@ -1710,20 +1823,26 @@ object TextIndex {
     * same artifacts, one shuffle for the whole batch. */
   def bm25ServeBatch(spark: SparkSession, path: String,
                      queries: Seq[(Long, Seq[String])],
-                     k: Int = 5): DataFrame = {
+                     k: Int = 5): DataFrame =
+    bm25ServeBatch(spark, path, commitOf(spark, path), queries, k)
+
+  /** [[bm25ServeBatch]] at a commit the caller already resolved. */
+  private[graft] def bm25ServeBatch(spark: SparkSession, path: String,
+                                    c: Commit,
+                                    queries: Seq[(Long, Seq[String])],
+                                    k: Int): DataFrame = {
     import spark.implicits._
     require(queries.nonEmpty && queries.forall(_._2.nonEmpty),
       "bm25ServeBatch needs at least one query, each with terms")
-    val c = commitOf(spark, path)
     val allTerms = queries.flatMap(_._2).distinct
     val qterms = queries.flatMap { case (q, ts) => ts.distinct.map((q, _)) }
       .toDF("qid", "term")
     val post = postingsFor(spark, path, allTerms, c)
       .select($"term", $"doc_id", $"tf".cast("double").as("tf"), $"dl")
-    val vocab = spark.read.parquet(s"$path/vocab/v=${c.seq}")
+    val vocab = readArtifact(spark, path, "vocab", c)
       .filter($"term".isin(allTerms: _*))
       .select($"term", $"df".cast("double").as("df"))
-    val stats = spark.read.parquet(s"$path/stats/v=${c.seq}")
+    val stats = readArtifact(spark, path, "stats", c)
       .select($"n_docs".cast("double").as("n_docs"),
         ($"sum_dl" / $"n_docs".cast("double")).as("corpus_avgdl"))
     val contrib = post
@@ -1758,14 +1877,23 @@ object TextIndex {
                        alpha: Double = 0.5, limit: Int = 10,
                        fusion: String = "relative",
                        candidates: Int = Candidates,
-                       nprobe: Int = Int.MaxValue): DataFrame = {
+                       nprobe: Int = Int.MaxValue): DataFrame =
+    hybridServeBatch(spark, path, commitOf(spark, path), queries, alpha,
+      limit, fusion, candidates, nprobe)
+
+  /** [[hybridServeBatch]] at a commit the caller already resolved —
+    * both legs read that one commit. */
+  private[graft] def hybridServeBatch(spark: SparkSession, path: String,
+                                      c: Commit,
+                                      queries: Seq[(Long, Seq[String])],
+                                      alpha: Double, limit: Int,
+                                      fusion: String, candidates: Int,
+                                      nprobe: Int): DataFrame = {
     import spark.implicits._
     require(fusion == "relative" || fusion == "ranked",
       s"fusion must be 'relative' or 'ranked', got '$fusion'")
     graft.plans.GraftFunctions.ensureRegistered(spark)
-    val c = commitOf(spark, path)
-    val wKw = Window.partitionBy($"qid").orderBy($"score".desc, $"doc_id")
-    val kw = bm25ServeBatch(spark, path, queries, k = candidates)
+    val kw = bm25ServeBatch(spark, path, c, queries, candidates)
       .select($"qid", $"doc_id", $"score".as("kw_score"))
     val qvecs = queries.map { case (q, ts) => (q, ts) }
       .toDF("qid", "terms")
@@ -1841,9 +1969,9 @@ object TextIndex {
   def indexStats(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val c = commitOf(spark, path)
-    spark.read.parquet(s"$path/stats/v=${c.seq}")
+    readArtifact(spark, path, "stats", c)
       .crossJoin(broadcast(
-        spark.read.parquet(s"$path/vocab/v=${c.seq}")
+        readArtifact(spark, path, "vocab", c)
           .agg(count(lit(1)).as("vocab_size"))))
       .select($"n_docs", $"sum_dl".cast("long").as("sum_tokens"),
         $"slt".as("sum_title_tokens"), $"slb".as("sum_body_tokens"),
@@ -1899,7 +2027,7 @@ object TextIndex {
     def rewrite(name: String, bucketCol: String): Unit = {
       val (fs, _) = hadoop(spark, path)
       if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/$name"))) {
-        liveRows(readBatched(spark, path, name, c), tomb)
+        liveRows(readArtifact(spark, path, name, c), tomb)
           .withColumn("batch", lit(nb))
           .repartition(col(bucketCol))
           .write.mode("overwrite")
@@ -1921,11 +2049,11 @@ object TextIndex {
       () => rewrite("docs", "dbucket"),
       () => rewrite("content", "dbucket"),
       () => rewrite("vectors", "cid"),
-      () => writeVersioned(spark.read.parquet(s"$path/vocab/v=${c.seq}"),
+      () => writeVersioned(readArtifact(spark, path, "vocab", c),
         path, "vocab", seq2),
-      () => writeVersioned(spark.read.parquet(s"$path/prefixes/v=${c.seq}"),
+      () => writeVersioned(readArtifact(spark, path, "prefixes", c),
         path, "prefixes", seq2),
-      () => writeVersioned(spark.read.parquet(s"$path/stats/v=${c.seq}"),
+      () => writeVersioned(readArtifact(spark, path, "stats", c),
         path, "stats", seq2),
       () => writeVersioned(emptyTombstones(spark), path, "tombstones", seq2),
       () => writeCents(spark, path, seq2, readCents(spark, path, c)),

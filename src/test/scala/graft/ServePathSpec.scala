@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.sources.TextIndex
@@ -8,7 +7,7 @@ import graft.sources.TextIndex
 /** The store-served request path (GraftEngine.runSearchFromIndex):
   * rows equal to the scan path's, one ranking pass, one commit, no
   * cache handle left behind. */
-class ServePathSpec extends SparkSpec {
+class ServePathSpec extends SparkSpec with JobCounting {
 
   private def corpus: DataFrame = {
     val sparkSession = spark
@@ -81,38 +80,6 @@ class ServePathSpec extends SparkSpec {
     Caches.releaseAll()
   }
 
-  /** Job ids of every job start, in delivery order. */
-  private final class JobIds extends SparkListener {
-    private val ids = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    override def onJobStart(e: SparkListenerJobStart): Unit = ids.add(e.jobId)
-    def all: Seq[Int] = ids.toArray.toSeq.map(_.asInstanceOf[Int])
-  }
-
-  /** The number of Spark jobs `body` submits: job ids are assigned in
-    * submission order, so they are the ids strictly between a marker
-    * job run just before and one run just after. The listener bus
-    * delivers in order: once the closing marker is seen, every job of
-    * the body has been too. */
-  private def jobsOf(l: JobIds)(body: => Any): Int = {
-    val sc = spark.sparkContext
-    def marker(): Int = {
-      val before = l.all.toSet
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      var fresh = l.all.filterNot(before)
-      while (fresh.isEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(20)
-        fresh = l.all.filterNot(before)
-      }
-      assert(fresh.nonEmpty, "the marker job never reached the listener")
-      fresh.max
-    }
-    val from = marker()
-    body
-    val to = marker()
-    l.all.count(id => id > from && id < to)
-  }
-
   test("one served search ranks once: fewer jobs than two rankings, no cache handle left") {
     val e = new GraftEngine(spark, corpus)
     val p = indexOf(e, "graft-serve-jobs")
@@ -170,6 +137,41 @@ class ServePathSpec extends SparkSpec {
     assert(contentOf(TextIndex.renderHits(spark, p, c1, hits, ranked.schema,
       terms, 10).collect().toSeq)(4L) == newText)
     assert(!rankAt(c1).collect().map(_.getLong(0)).contains(4L))
+    Caches.releaseAll()
+  }
+
+  test("a batch serve reads both legs at the commit it was pinned to") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    val p = java.nio.file.Files.createTempDirectory("graft-serve-batch-snap")
+      .toString
+    TextIndex.write(corpus, p)
+    val qs = Seq(1L -> Seq("hash", "join"), 2L -> Seq("spark", "join"))
+    val c0 = TextIndex.commitOf(spark, p)
+    def hybridAt(c: TextIndex.Commit): Seq[Row] =
+      TextIndex.hybridServeBatch(spark, p, c, qs, 0.5, 4, "relative",
+        TextIndex.Candidates, Int.MaxValue).collect().toSeq
+    def bm25At(c: TextIndex.Commit): Seq[Row] =
+      TextIndex.bm25ServeBatch(spark, p, c, qs, 4).collect().toSeq
+    val hybrid0 = hybridAt(c0)
+    val bm250 = bm25At(c0)
+    assert(hybrid0.map(_.getAs[Long]("doc_id")).contains(4L))
+    assert(hybrid0 == TextIndex.hybridServeBatch(spark, p, qs, limit = 4)
+      .collect().toSeq, "the pinned overload must equal the public call")
+    // a commit rewrites a page both legs ranked; no vacuum, so the
+    // older commit's files are still there
+    TextIndex.upsert(
+      Seq((4L, "rewritten page about something else")).toDF("doc_id", "text"),
+      p)
+    val c1 = TextIndex.commitOf(spark, p)
+    assert(c1.seq > c0.seq)
+    assert(hybridAt(c0) == hybrid0,
+      "the keyword and vector legs pinned to c0 must both read c0")
+    assert(bm25At(c0) == bm250)
+    // the newer commit ranks differently: the rewritten page lost
+    // its keyword hits
+    assert(hybridAt(c1) != hybrid0)
+    assert(!bm25At(c1).map(_.getAs[Long]("doc_id")).contains(4L))
     Caches.releaseAll()
   }
 }
