@@ -81,7 +81,14 @@ object Chunker {
 
   /** Split markdown into typed chunks: code fences preserved whole
     * (split by lines only when over budget), prose split by
-    * headers -> paragraphs -> lines -> words; noise filtered. */
+    * headers -> paragraphs -> lines -> words; noise filtered.
+    *
+    * The noise filter ([[isNoiseChunk]]) runs over the fragments AFTER
+    * splitting, as the reference's ChunkMarkdown does (chunker.go:
+    * 109-188). So a 1–3-word tail of over-budget prose (or a short
+    * header left alone when its first paragraph does not fit beside
+    * it) is dropped by design — reference parity, not a merge into
+    * its neighbour. */
   def chunkMarkdown(text: String, maxTokens: Int, overlap: Int): Seq[Chunk] = {
     val cleaned = cleanMarkdownNoise(text)
     val out = ArrayBuffer.empty[Chunk]

@@ -473,19 +473,43 @@ object Knn {
       .orderBy($"q_id", $"rnk")
   }
 
-  /** GENERATION marker of an ANN store — the TextIndex versioned-
-    * commit discipline applied to the full-layout rewrites: an
-    * OPTIMIZE/COMPACT stages the WHOLE rewritten layout under
-    * `_gen_N+1` (an underscore-prefixed dir, so partition discovery on
-    * the live root never sees it) and then flips the ONE `_gen`
-    * marker — a crash at any earlier point leaves readers serving
-    * the previous generation, with the torn staging dir invisible.
-    * Generation 0 (no marker) is the legacy root layout, so every
-    * existing store reads and mutates unchanged. Incremental
-    * mutations (append/upsert/delete, the streaming epochs) stay
-    * in-place WITHIN the current generation under the remove-then-
-    * add replay contract; the generation flip covers the one
-    * mutation class that rewrites the whole layout at once. */
+  /** THE ANN-STORE CONTRACT. The five persisted ANN stores (IVF, PQ,
+    * NN-graph, Vamana, graph+PQ) share one on-disk discipline and
+    * mutate only through the private primitives that follow this
+    * block; the public store functions are each one call into them.
+    *
+    *  - LAYOUT: a store is one or more TIERS of parquet, each
+    *    partitioned by one column: `cid=` cells (IVF at its data root;
+    *    PQ's `codes/` + `vectors/`), `nbucket=` edge buckets (a graph
+    *    store's edge tier) or `vbucket=` id buckets (the graph stores'
+    *    companion vector and codes tables). A mutation rewrites only
+    *    the partitions it touches ([[rewriteParts]], [[replaceRows]]).
+    *  - TOMBSTONES: `_tombstones` (vec_id rows) is the IVF/PQ
+    *    logical-delete list — FAISS's remove_ids for the disk layout:
+    *    a delete is one tiny write, every serve anti-joins the list,
+    *    and upsert/compact/optimize are where rows physically leave.
+    *    [[ivfTombstones]] is its one reader, [[writeTombstones]] its
+    *    one writer. The graph stores delete physically and keep none.
+    *  - GENERATIONS: a full-layout rewrite ([[optimizeStore]]) stages
+    *    the whole store under `_gen_{N+1}[/tier]` (an underscore dir,
+    *    so partition discovery on the live root never sees it) and
+    *    flips the ONE `_gen` marker: a crash at any earlier point
+    *    leaves readers on generation N, the torn staging invisible.
+    *    Generation 0 (no marker) keeps its data at the store root, so
+    *    IVF's generation-0 data root also holds `_tombstones`,
+    *    `_epoch` and a stream's `_checkpoints` — nothing may wipe it.
+    *    Incremental mutations stay in place within the current
+    *    generation ([[storeDataDir]]).
+    *  - EPOCH MARKER: `_epoch` is the highest streaming epoch folded
+    *    in ([[storeLastEpoch]]), written AFTER the epoch's mutations
+    *    landed ([[writeStoreEpoch]], via [[graft.sources.Markers]]).
+    *  - REPLAY: at-least-once delivery re-runs epochs. A re-delivered
+    *    COMMITTED epoch is skipped on the marker; a crashed half-epoch
+    *    re-runs, and converges because every mutation is
+    *    remove-then-add (an upsert first drops the arriving ids' old
+    *    rows, wherever they sit) and a delete is idempotent. The
+    *    maintenance streams share one driver,
+    *    graft.streaming.IngestStream's `storeStream`. */
   private[graft] def storeGen(spark: SparkSession, path: String): Long =
     graft.sources.Markers.read(spark, s"$path/_gen")
       .map(_.trim.toLong).getOrElse(0L)
@@ -497,25 +521,239 @@ object Knn {
     if (g == 0L) path else s"$path/_gen_$g"
   }
 
-  /** Flip the generation marker (the commit point) and sweep every
-    * older generation's data — the sweep is idempotent, so a crash
-    * between flip and sweep self-heals on the next flip. `staleRoot`
-    * names the legacy generation-0 data entries at the store root
-    * (partition dirs for the single-table stores, the codes/vectors
-    * pair for the PQ store) that the first flip retires. */
-  private def commitStoreGen(spark: SparkSession, path: String,
-                             gen: Long,
-                             staleRoot: String => Boolean): Unit = {
+  /** Tier lists of the two vector stores, relative to the current
+    * generation's data root ("" is that root itself). */
+  private[graft] val IvfTiers = Seq("")
+  private[graft] val PqTiers = Seq("codes", "vectors")
+
+  private def tierDirs(spark: SparkSession, path: String,
+                       tiers: Seq[String]): Seq[String] = {
+    val d = storeDataDir(spark, path)
+    tiers.map(t => if (t.isEmpty) d else s"$d/$t")
+  }
+
+  private def fsOf(spark: SparkSession,
+                   dir: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** Whether `dir` holds `part=` partitions — a data probe, not an
+    * existence probe: a stream's checkpoint creates the store root
+    * before its first batch, and an empty write leaves a
+    * `_SUCCESS`-only directory that would wedge every later read. */
+  private def hasParts(spark: SparkSession, dir: String,
+                       part: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = fsOf(spark, dir)
+    fs.exists(p) &&
+      fs.listStatus(p).exists(_.getPath.getName.startsWith(s"$part="))
+  }
+
+  /** Whether EVERY tier of the current generation holds partitions —
+    * the maintenance streams' build probe. A store with one tier
+    * landed and another missing (a first build torn between its tier
+    * writes) reads as unbuilt. */
+  private[graft] def storeBuilt(spark: SparkSession, path: String,
+                                part: String, tiers: Seq[String]): Boolean =
+    tierDirs(spark, path, tiers).forall(hasParts(spark, _, part))
+
+  /** Delete the NAMED tiers of the current generation — a torn first
+    * build's leftovers. Never the data root (""): see the contract. */
+  private[graft] def wipeTiers(spark: SparkSession, path: String,
+                               tiers: Seq[String]): Unit =
+    tierDirs(spark, path, tiers).zip(tiers).foreach { case (d, t) =>
+      if (t.nonEmpty)
+        fsOf(spark, d).delete(new org.apache.hadoop.fs.Path(d), true): Unit
+    }
+
+  /** The logical-delete list (empty when absent). */
+  private def ivfTombstones(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
+    val t = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
+    if (fsOf(spark, path).exists(t)) spark.read.parquet(s"$path/_tombstones")
+    else Seq.empty[Long].toDF("vec_id")
+  }
+
+  /** The three edits of the tombstone list: add ids (a delete), remove
+    * ids (an upsert or a first build re-adding them), or empty it
+    * (after its ids left physically). */
+  private sealed trait TombstoneEdit
+  private final case class Bury(ids: DataFrame) extends TombstoneEdit
+  private final case class Revive(ids: DataFrame) extends TombstoneEdit
+  private case object ResetTombstones extends TombstoneEdit
+
+  /** The ONE `_tombstones` writer. Revive and reset of an absent list
+    * write nothing (there is nothing to remove); the localCheckpoint
+    * breaks the read→overwrite cycle on the list. */
+  private def writeTombstones(spark: SparkSession, path: String,
+                              edit: TombstoneEdit): Unit = {
+    import spark.implicits._
+    val t = s"$path/_tombstones"
+    val exists = fsOf(spark, path).exists(new org.apache.hadoop.fs.Path(t))
+    val next = edit match {
+      case Bury(ids) => Some(ivfTombstones(spark, path)
+        .unionByName(ids.select($"vec_id")).distinct().localCheckpoint(true))
+      case Revive(ids) if exists => Some(ivfTombstones(spark, path)
+        .join(broadcast(ids.select($"vec_id")), Seq("vec_id"), "left_anti")
+        .localCheckpoint(true))
+      case ResetTombstones if exists => Some(Seq.empty[Long].toDF("vec_id"))
+      case _ => None
+    }
+    next.foreach(_.write.mode("overwrite").parquet(t))
+  }
+
+  /** Highest streaming epoch folded into the store (−1 when never
+    * stream-maintained) — the replay guard of the contract. */
+  def storeLastEpoch(spark: SparkSession, path: String): Long =
+    graft.sources.Markers.read(spark, s"$path/_epoch")
+      .map(_.toLong).getOrElse(-1L)
+
+  /** Record the epoch AFTER its mutations landed. */
+  def writeStoreEpoch(spark: SparkSession, path: String, e: Long): Unit =
+    graft.sources.Markers.write(spark, s"$path/_epoch", e.toString,
+      "ANN-store epoch marker")
+
+  /** Distinct values of `c` over `df`, as longs (partition values are
+    * discovered as ints or longs depending on their range). */
+  private def partsOf(df: DataFrame, c: Column): Seq[Long] =
+    df.select(c.cast("long")).distinct().collect().map(_.getLong(0)).toSeq
+
+  private def bucketOf(id: Column): Column =
+    pmod(id, lit(GraphBuckets.toLong))
+
+  /** THE partition rewrite: the `touched` partitions of `dir` become
+    * `kept` through a dynamic overwrite (every other partition stays
+    * untouched on disk), and a touched partition that `kept` leaves
+    * EMPTY is dropped explicitly — dynamic overwrite only replaces
+    * partitions present in the written data, so its old files would
+    * otherwise survive (resurrecting deletes once a tombstone list
+    * clears). Driver state: ≤ |touched| partition values. */
+  private def rewriteParts(spark: SparkSession, dir: String, part: String,
+                           touched: Seq[Long], kept: DataFrame): Unit = {
+    if (touched.isEmpty) return
+    // kept usually reads `dir` itself: materialize before overwriting
+    val k = kept.localCheckpoint(true)
+    k.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(part).parquet(dir)
+    val fs = fsOf(spark, dir)
+    (touched.toSet -- partsOf(k, col(part))).foreach { b =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$part=$b"), true): Unit
+    }
+  }
+
+  /** Inside the `touched` partitions of `dir`, every row whose `key`
+    * is in `keys` leaves and `add`'s rows land: a delete (no `add`)
+    * or a survivors-plus-delta upsert (`keys` = the delta's own
+    * keys). A table with no partitions yet takes `add` as its first
+    * write. */
+  private def replaceRows(spark: SparkSession, dir: String, part: String,
+                          key: String, touched: Seq[Long], keys: DataFrame,
+                          add: Option[DataFrame] = None): Unit = {
+    val survivors =
+      if (!hasParts(spark, dir, part)) None
+      else Some(spark.read.parquet(dir).filter(col(part).isin(touched: _*))
+        .join(broadcast(keys.select(key).distinct()), Seq(key), "left_anti"))
+    (add ++ survivors)
+      .reduceOption((a, s) => a.unionByName(s.select(a.columns.map(col): _*)))
+      .foreach(rewriteParts(spark, dir, part, touched, _))
+  }
+
+  /** Physically drop `ids` from each cid-partitioned tier directory:
+    * only the cells holding them — found by an id join, since a
+    * changed vector's old copy may sit in a DIFFERENT cell than its
+    * new one — rewrite. */
+  private def dropFromCells(spark: SparkSession, dirs: Seq[String],
+                            ids: DataFrame): Unit =
+    dirs.foreach { dir =>
+      val touched = partsOf(spark.read.parquet(dir)
+        .join(broadcast(ids), Seq("vec_id"), "left_semi"), col("cid"))
+      replaceRows(spark, dir, "cid", "vec_id", touched, ids)
+    }
+
+  /** UPSERT into a vector store (IVF or PQ): the batch ids' old rows
+    * leave every tier, their tombstones revive, and `append` adds the
+    * new rows under the FROZEN quantizer — remove-then-add. */
+  private def upsertVectorStore(spark: SparkSession, path: String,
+                                tiers: Seq[String], vectors: DataFrame,
+                                append: DataFrame => Unit): Unit = {
+    import spark.implicits._
+    val ids = vectors.select($"vec_id").distinct().localCheckpoint(true)
+    dropFromCells(spark, tierDirs(spark, path, tiers), ids)
+    writeTombstones(spark, path, Revive(ids))
+    append(vectors.select($"vec_id", $"v"))
+  }
+
+  /** COMPACT a vector store: tombstoned rows leave the cells that hold
+    * them (cell-scoped, every tier), then the list empties. Serving
+    * is identical before and after; the anti-join just gets cheaper. */
+  private def compactVectorStore(spark: SparkSession, path: String,
+                                 tiers: Seq[String]): Unit = {
+    val tomb = ivfTombstones(spark, path).localCheckpoint(true)
+    dropFromCells(spark, tierDirs(spark, path, tiers), tomb)
+    writeTombstones(spark, path, ResetTombstones)
+  }
+
+  /** THE generation commit — full OPTIMIZE of any ANN store: each
+    * tier's live rows (tombstones dropped, one file per partition)
+    * stage complete under `_gen_{N+1}[/tier]`, the ONE `_gen` flip
+    * commits, and older generations — plus, on the first flip, the
+    * generation-0 tiers at the root — sweep. The sweep is idempotent,
+    * so a crash between flip and sweep self-heals on the next flip;
+    * the tombstone reset after the flip is harmless either way (the
+    * new generation already dropped those rows). The tier rewrites
+    * read and write disjoint directories: concurrent jobs. */
+  private def optimizeStore(spark: SparkSession, path: String, part: String,
+                            tiers: Seq[String]): Unit = {
+    val gen = storeGen(spark, path) + 1
+    val tomb = ivfTombstones(spark, path)
+    graft.Par.run(tierDirs(spark, path, tiers).zip(tiers).map {
+      case (from, t) => () =>
+        // a static overwrite of the fresh staging dir also truncates
+        // torn staging left by a crashed earlier attempt
+        spark.read.parquet(from)
+          .join(broadcast(tomb), Seq("vec_id"), "left_anti")
+          .repartition(col(part))
+          .write.mode("overwrite").partitionBy(part)
+          .parquet(s"$path/_gen_$gen" + (if (t.isEmpty) "" else s"/$t"))
+    })
     graft.sources.Markers.write(spark, s"$path/_gen", gen.toString,
       "ANN-store generation marker")
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(p).map(_.getPath).foreach { c =>
-      val n = c.getName
-      val staleGen = n.startsWith("_gen_") &&
-        n.stripPrefix("_gen_").toLong < gen
-      if (staleGen || (gen > 0L && staleRoot(n))) fs.delete(c, true): Unit
-    }
+    val fs = fsOf(spark, path)
+    fs.listStatus(new org.apache.hadoop.fs.Path(path)).map(_.getPath)
+      .foreach { c =>
+        val n = c.getName
+        val stale = (n.startsWith("_gen_") && n.stripPrefix("_gen_").toLong < gen) ||
+          n.startsWith(s"$part=") || tiers.contains(n)
+        if (stale) fs.delete(c, true): Unit
+      }
+    writeTombstones(spark, path, ResetTombstones)
+  }
+
+  /** THE count gate — TextIndex.maybeCompact's pattern for every ANN
+    * store: metadata-only signals decide, no data scan. The mean files
+    * per partition across the tiers' listings (every append or bucket
+    * rewrite adds files) and, for a tombstoned store, the list's row
+    * count; past either bound [[optimizeStore]] runs, which resets
+    * both. A store with no data yet (a stream can tombstone deletes
+    * before its first build) never fires. Returns whether it ran. */
+  private def optimizeIfDue(spark: SparkSession, path: String, part: String,
+                            tiers: Seq[String], maxFilesPerPart: Double,
+                            maxTombstones: Option[Long]): Boolean = {
+    import spark.implicits._
+    if (!storeBuilt(spark, path, part, tiers)) return false
+    val files = tierDirs(spark, path, tiers).zip(tiers)
+      .map { case (d, t) => graft.sources.Compaction.listFiles(spark, d)
+        .withColumn("partition", concat(lit(t + "/"), $"partition")) }
+      .reduce(_ unionByName _)
+      .filter(!$"partition".endsWith("/")) // partitioned data files only
+      .groupBy($"partition").agg(count(lit(1)).as("n"))
+      .agg(coalesce(avg($"n"), lit(0.0)).as("avg_files"))
+      .head().getDouble(0)
+    val due = files > maxFilesPerPart ||
+      maxTombstones.exists(ivfTombstones(spark, path).count() > _)
+    if (due) optimizeStore(spark, path, part, tiers)
+    due
   }
 
   /** PERSISTED IVF index — the serving layout a 100 TB deployment
@@ -559,202 +797,53 @@ object Knn {
       .parquet(storeDataDir(vectors.sparkSession, path))
   }
 
-  /** The IVF store's logical-delete list (vec_id rows under
-    * `_tombstones/`) — FAISS's remove_ids for the disk layout:
-    * a delete is one tiny write, serving anti-joins the list, and
-    * [[compactIvfIndex]] (or [[upsertIvfIndex]]'s physical replace)
-    * is where rows actually disappear. Empty when absent. */
-  private def ivfTombstones(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val t = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
-    if (t.getFileSystem(spark.sessionState.newHadoopConf()).exists(t))
-      spark.read.parquet(s"$path/_tombstones")
-    else Seq.empty[Long].toDF("vec_id")
-  }
-
-  /** Highest streaming epoch folded into the IVF store (−1 when
-    * never stream-maintained) — the at-least-once replay guard for
-    * [[graft.streaming.IngestStream.ivfIndexStream]]. The store's
-    * mutations are remove-then-add (idempotent under re-execution:
-    * the remove step clears any half-appended copies of the same
-    * ids), so the marker only needs to gate WHOLE epochs, not stage
-    * artifacts like the text index's versioned commits. */
-  def storeLastEpoch(spark: SparkSession, path: String): Long =
-    graft.sources.Markers.read(spark, s"$path/_epoch")
-      .map(_.toLong).getOrElse(-1L)
-
-  /** Record the epoch AFTER its mutations landed — a crash before
-    * this write replays the epoch, which converges (remove-then-add);
-    * the shared marker discipline ([[graft.sources.Markers]]) keeps
-    * readers off torn lines. */
-  def writeStoreEpoch(spark: SparkSession, path: String, e: Long): Unit =
-    graft.sources.Markers.write(spark, s"$path/_epoch", e.toString,
-      "ANN-store epoch marker")
-
-  /** DELETE vectors from a written IVF store — the logical half of
-    * the text index's lifecycle applied to the ANN side: the ids
-    * join the tombstone list (one vocab-free tiny write; the
-    * localCheckpoint breaks the read→overwrite cycle) and every
-    * serve excludes them. A tombstoned id comes back only through
-    * [[upsertIvfIndex]], which physically replaces it. */
+  /** DELETE vectors from a written IVF or PQ store: the ids join the
+    * tombstone list and every serve excludes them. A tombstoned id
+    * comes back only through an upsert, which physically replaces it. */
   def deleteFromIvfIndex(spark: SparkSession, path: String,
-                         ids: DataFrame): Unit = {
-    import spark.implicits._
-    ivfTombstones(spark, path)
-      .unionByName(ids.select($"vec_id"))
-      .distinct()
-      .localCheckpoint(true)
-      .write.mode("overwrite").parquet(s"$path/_tombstones")
-  }
+                         ids: DataFrame): Unit =
+    writeTombstones(spark, path, Bury(ids))
 
-  /** Remove `ids` from the tombstone list if one exists — the revive
-    * half of [[upsertIvfIndex]] on its own. The streaming first-BUILD
-    * path needs it: a delete notice can arrive before the store has
-    * any cells (epoch 0 carries only deletes), leaving a tombstone
-    * with no data; the later build epoch appends the id and must
-    * clear that tombstone or the vector stays invisible forever. */
+  /** Remove `ids` from the tombstone list — the revive half of an
+    * upsert on its own. The streaming first BUILD needs it: a delete
+    * notice can arrive before the store has any cells, and the later
+    * build epoch must clear that tombstone or the vector stays
+    * invisible forever. */
   def clearIvfTombstones(spark: SparkSession, path: String,
-                         ids: DataFrame): Unit = {
-    import spark.implicits._
-    val t = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
-    if (!t.getFileSystem(spark.sessionState.newHadoopConf()).exists(t))
-      return
-    ivfTombstones(spark, path)
-      .join(broadcast(ids.select($"vec_id")), Seq("vec_id"), "left_anti")
-      .localCheckpoint(true)
-      .write.mode("overwrite").parquet(s"$path/_tombstones")
-  }
+                         ids: DataFrame): Unit =
+    writeTombstones(spark, path, Revive(ids))
 
   /** UPSERT vectors into a written IVF store — re-embedded documents
     * replace their old copies (the c18 re-crawl consumer on the ANN
-    * side): the batch ids' OLD rows are physically removed by a
-    * cell-scoped dynamic-partition rewrite (their cells are found by
-    * an id join — the old and new copy of a changed vector can land
-    * in DIFFERENT cells, so the old cell must be cleaned, exactly
-    * FAISS remove-then-add), their tombstones (if any) clear, and
-    * the new vectors assign against the FROZEN quantizer and append.
-    * a24 oracle-gates serve-after-upsert against exact kNN over the
+    * side), remove-then-add under the FROZEN quantizer, old cells
+    * physically cleaned even when the vector moved cells. a24
+    * oracle-gates serve-after-upsert against exact kNN over the
     * final vectors. */
   def upsertIvfIndex(spark: SparkSession, path: String,
-                     cents: Seq[Seq[Double]], vectors: DataFrame): Unit = {
-    import spark.implicits._
-    val ids = vectors.select($"vec_id").distinct().localCheckpoint(true)
-    val data = storeDataDir(spark, path)
-    // cells carrying old copies: an id join over the store — the
-    // FAISS remove_ids scan; bounded output (≤ |cells| values)
-    val touched = spark.read.parquet(data)
-      .join(broadcast(ids), Seq("vec_id"), "left_semi")
-      .select($"cid").distinct().collect().map(_.getInt(0)).toSeq
-    rewriteTouchedCells(spark, data, touched,
-      spark.read.parquet(data)
-        .filter($"cid".isin(touched: _*))
-        .join(broadcast(ids), Seq("vec_id"), "left_anti"))
-    val tomb = ivfTombstones(spark, path)
-      .join(broadcast(ids), Seq("vec_id"), "left_anti")
-      .localCheckpoint(true)
-    tomb.write.mode("overwrite").parquet(s"$path/_tombstones")
-    appendToIvfIndex(path, cents, vectors)
-  }
+                     cents: Seq[Seq[Double]], vectors: DataFrame): Unit =
+    upsertVectorStore(spark, path, IvfTiers, vectors,
+      appendToIvfIndex(path, cents, _))
 
-  /** COMPACT a written IVF store: physically drop tombstoned rows
-    * (cell-scoped rewrite of only the cells that carry them) and
-    * clear the tombstone list — serve is identical before and after
-    * (the spec pins it), the anti-join just gets cheaper. */
-  def compactIvfIndex(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
-    val tomb = ivfTombstones(spark, path).localCheckpoint(true)
-    val data = storeDataDir(spark, path)
-    val touched = spark.read.parquet(data)
-      .join(broadcast(tomb), Seq("vec_id"), "left_semi")
-      .select($"cid").distinct().collect().map(_.getInt(0)).toSeq
-    rewriteTouchedCells(spark, data, touched,
-      spark.read.parquet(data)
-        .filter($"cid".isin(touched: _*))
-        .join(broadcast(tomb), Seq("vec_id"), "left_anti"))
-    Seq.empty[Long].toDF("vec_id")
-      .write.mode("overwrite").parquet(s"$path/_tombstones")
-  }
+  /** COMPACT a written IVF store: tombstoned rows drop physically from
+    * only the cells that carry them, and the list clears. */
+  def compactIvfIndex(spark: SparkSession, path: String): Unit =
+    compactVectorStore(spark, path, IvfTiers)
 
-  /** Full OPTIMIZE of the IVF store — the TextIndex.compact
-    * discipline on the ANN side, now with the SAME staged-commit
-    * guarantee: the live rows (tombstones dropped, one file per
-    * cell) stage as a complete NEW GENERATION under `_gen_N+1` —
-    * invisible to readers and partition discovery alike — and the
-    * ONE `_gen` marker flip is the commit. A crash at any earlier
-    * point leaves the store serving generation N bit-exactly; the
-    * tombstone reset AFTER the flip is harmless either way (the new
-    * generation already dropped those rows physically, so the stale
-    * anti-join is a no-op) and the old generation's sweep is
-    * idempotent. [[compactIvfIndex]] remains the cheaper
-    * tombstone-only cell rewrite when fragmentation isn't the
+  /** Full OPTIMIZE of the IVF store as one staged generation commit
+    * (see the ANN-store contract); [[compactIvfIndex]] remains the
+    * cheaper tombstone-only cell rewrite when fragmentation isn't the
     * signal. */
-  def optimizeIvfIndex(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
-    val tomb = ivfTombstones(spark, path).localCheckpoint(true)
-    val gen = storeGen(spark, path)
-    val live = spark.read.parquet(storeDataDir(spark, path))
-      .join(broadcast(tomb), Seq("vec_id"), "left_anti")
-      .repartition(col("cid"))
-    // static overwrite of the FRESH staging dir (also truncates any
-    // torn staging left by a crashed earlier attempt), then flip
-    live.write.mode("overwrite").partitionBy("cid")
-      .parquet(s"$path/_gen_${gen + 1}")
-    commitStoreGen(spark, path, gen + 1, _.startsWith("cid="))
-    Seq.empty[Long].toDF("vec_id")
-      .write.mode("overwrite").parquet(s"$path/_tombstones")
-  }
+  def optimizeIvfIndex(spark: SparkSession, path: String): Unit =
+    optimizeStore(spark, path, "cid", IvfTiers)
 
-  /** COUNT-GATED auto-compaction for the IVF store — the
-    * TextIndex.maybeCompact pattern: two metadata-only signals (the
-    * tombstone list's row count — a tiny vocab-free table — and the
-    * file listing's files-per-cell curve, which every append/upsert
-    * grows by one file per touched cell) decide; no data scan.
-    * Fires [[optimizeIvfIndex]] when either bound is exceeded, which
-    * resets BOTH signals. Returns whether a rewrite ran; serving is
-    * bit-equal either way, so maintenance paths drop this after any
-    * mutation. */
+  /** COUNT-GATED auto-compaction for the IVF store: fires
+    * [[optimizeIvfIndex]] past either bound. Serving is bit-equal
+    * either way, so maintenance paths drop the result. */
   def maybeCompactIvf(spark: SparkSession, path: String,
                       maxTombstones: Long = 10000L,
-                      maxFilesPerCell: Double = 4.0): Boolean = {
-    import spark.implicits._
-    val files = graft.sources.Compaction
-      .listFiles(spark, storeDataDir(spark, path))
-      .filter($"partition" =!= "") // data cells only, not _tombstones/
-      .groupBy($"partition").agg(count(lit(1)).as("n"))
-      .agg(coalesce(avg($"n"), lit(0.0)).as("avg_files"))
-      .head().getDouble(0)
-    val due = files > maxFilesPerCell ||
-      ivfTombstones(spark, path).count() > maxTombstones
-    if (due) optimizeIvfIndex(spark, path)
-    due
-  }
-
-  /** Cell-scoped rewrite of `touched` cids with the survivors in
-    * `kept` — and the cleanup dynamic partition overwrite alone
-    * cannot do: dynamic mode only replaces partitions PRESENT in the
-    * written data, so a touched cell whose rows were ALL removed
-    * writes no partition and its old files would silently survive
-    * (resurrecting deletes once the tombstone list clears). Those
-    * cells' directories drop explicitly, mirroring
-    * [[deleteFromNnGraphStore]]'s (affected − written) cleanup;
-    * bounded driver state: ≤ |touched| cell ids. */
-  private def rewriteTouchedCells(spark: SparkSession, path: String,
-                                  touched: Seq[Int],
-                                  kept: DataFrame): Unit = {
-    import spark.implicits._
-    if (touched.isEmpty) return
-    val k = kept.localCheckpoint(true)
-    k.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cid").parquet(path)
-    val written = k.select($"cid").distinct()
-      .collect().map(_.getInt(0)).toSet
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    (touched.toSet -- written).foreach { c =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/cid=$c"), true): Unit
-    }
-  }
+                      maxFilesPerCell: Double = 4.0): Boolean =
+    optimizeIfDue(spark, path, "cid", IvfTiers, maxFilesPerCell,
+      Some(maxTombstones))
 
   /** The session's UPSERTED IVF store for `dir`: built on a STALE
     * vector set (vec_id % 7 == 3 rows shifted by +1.0 per dimension —
@@ -1156,28 +1245,9 @@ object Knn {
     * fires [[optimizePqIndex]], which resets both signals. */
   def maybeCompactPq(spark: SparkSession, path: String,
                      maxTombstones: Long = 10000L,
-                     maxFilesPerCell: Double = 4.0): Boolean = {
-    import spark.implicits._
-    val data = storeDataDir(spark, path)
-    // no data, no OPTIMIZE: a stream-maintained store can tombstone
-    // deletes before its first build epoch — firing the rewrite
-    // there would read nonexistent tiers and crash the epoch
-    val c = new org.apache.hadoop.fs.Path(s"$data/codes")
-    if (!c.getFileSystem(spark.sessionState.newHadoopConf()).exists(c))
-      return false
-    val files = Seq("codes", "vectors")
-      .map(t => graft.sources.Compaction.listFiles(spark, s"$data/$t")
-        .withColumn("partition", concat(lit(t + "/"), $"partition")))
-      .reduce(_ unionByName _)
-      .filter(!$"partition".endsWith("/"))
-      .groupBy($"partition").agg(count(lit(1)).as("n"))
-      .agg(coalesce(avg($"n"), lit(0.0)).as("avg_files"))
-      .head().getDouble(0)
-    val due = files > maxFilesPerCell ||
-      ivfTombstones(spark, path).count() > maxTombstones
-    if (due) optimizePqIndex(spark, path)
-    due
-  }
+                     maxFilesPerCell: Double = 4.0): Boolean =
+    optimizeIfDue(spark, path, "cid", PqTiers, maxFilesPerCell,
+      Some(maxTombstones))
 
   /** The PQ store's frozen quantizer pair, read back from its
     * artifacts (tiny: k cells + m·kb codewords). */
@@ -1274,80 +1344,25 @@ object Knn {
   }
 
   /** UPSERT into the PQ store — [[upsertIvfIndex]]'s remove-then-add
-    * on BOTH tiers: the batch ids' old rows physically leave the
-    * cells that carry them (the changed vector may re-assign to a
-    * DIFFERENT cell, so the old cell rewrites), their tombstones
-    * clear, and the new vectors encode against the FROZEN quantizer
-    * pair and append. Serve afterwards is bit-equal to a fresh
-    * build over the final vectors (KnnPqStoreSpec pins it). */
+    * on BOTH tiers: the batch ids' old rows leave the cells that carry
+    * them, their tombstones clear, and the new vectors encode against
+    * the FROZEN quantizer pair and append. Serve afterwards is
+    * bit-equal to a fresh build over the final vectors (KnnPqStoreSpec
+    * pins it). */
   def upsertPqIndex(spark: SparkSession, path: String,
-                    vectors: DataFrame): Unit = {
-    import spark.implicits._
-    val ids = vectors.select($"vec_id").distinct().localCheckpoint(true)
-    val data = storeDataDir(spark, path)
-    Seq(s"$data/codes", s"$data/vectors").foreach { tier =>
-      val touched = spark.read.parquet(tier)
-        .join(broadcast(ids), Seq("vec_id"), "left_semi")
-        .select($"cid").distinct().collect().map(_.getInt(0)).toSeq
-      rewriteTouchedCells(spark, tier, touched,
-        spark.read.parquet(tier)
-          .filter($"cid".isin(touched: _*))
-          .join(broadcast(ids), Seq("vec_id"), "left_anti"))
-    }
-    ivfTombstones(spark, path)
-      .join(broadcast(ids), Seq("vec_id"), "left_anti")
-      .localCheckpoint(true)
-      .write.mode("overwrite").parquet(s"$path/_tombstones")
-    appendToPqIndex(spark, path, vectors.select($"vec_id", $"v"))
-  }
+                    vectors: DataFrame): Unit =
+    upsertVectorStore(spark, path, PqTiers, vectors,
+      appendToPqIndex(spark, path, _))
 
-  /** COMPACT the PQ store: cell-scoped physical drop of tombstoned
-    * rows from BOTH tiers (only the cells that carry them rewrite),
-    * then clear the list — serve bit-equal before/after, the
-    * [[compactIvfIndex]] contract. */
-  def compactPqIndex(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
-    val tomb = ivfTombstones(spark, path).localCheckpoint(true)
-    val data = storeDataDir(spark, path)
-    Seq(s"$data/codes", s"$data/vectors").foreach { tier =>
-      val touched = spark.read.parquet(tier)
-        .join(broadcast(tomb), Seq("vec_id"), "left_semi")
-        .select($"cid").distinct().collect().map(_.getInt(0)).toSeq
-      rewriteTouchedCells(spark, tier, touched,
-        spark.read.parquet(tier)
-          .filter($"cid".isin(touched: _*))
-          .join(broadcast(tomb), Seq("vec_id"), "left_anti"))
-    }
-    Seq.empty[Long].toDF("vec_id")
-      .write.mode("overwrite").parquet(s"$path/_tombstones")
-  }
+  /** COMPACT the PQ store: [[compactIvfIndex]] over both tiers. */
+  def compactPqIndex(spark: SparkSession, path: String): Unit =
+    compactVectorStore(spark, path, PqTiers)
 
-  /** Full OPTIMIZE of the PQ store — the staged-generation commit
-    * ([[optimizeIvfIndex]]'s contract) over the two-tier layout: live
-    * rows of both tiers stage complete under `_gen_N+1/codes` +
-    * `_gen_N+1/vectors`, the ONE `_gen` flip commits, older
-    * generations (and the gen-0 root pair on the first flip) sweep
-    * idempotently. A crash at any earlier point leaves readers on
-    * generation N bit-exactly. */
-  def optimizePqIndex(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
-    val tomb = ivfTombstones(spark, path).localCheckpoint(true)
-    val gen = storeGen(spark, path)
-    val data = storeDataDir(spark, path)
-    // the two tier rewrites read and write disjoint directories —
-    // concurrent jobs, one straggler tail instead of two
-    graft.Par.run(Seq("codes", "vectors").map(tier => () => {
-      spark.read.parquet(s"$data/$tier")
-        .join(broadcast(tomb), Seq("vec_id"), "left_anti")
-        .repartition(col("cid"))
-        .write.mode("overwrite").partitionBy("cid")
-        .parquet(s"$path/_gen_${gen + 1}/$tier")
-    }))
-    commitStoreGen(spark, path, gen + 1,
-      n => n == "codes" || n == "vectors")
-    Seq.empty[Long].toDF("vec_id")
-      .write.mode("overwrite").parquet(s"$path/_tombstones")
-  }
+  /** Full OPTIMIZE of the PQ store: the generation commit over the
+    * two-tier layout (`_gen_N+1/codes` + `_gen_N+1/vectors`; the first
+    * flip retires the generation-0 pair at the root). */
+  def optimizePqIndex(spark: SparkSession, path: String): Unit =
+    optimizeStore(spark, path, "cid", PqTiers)
 
   /** The session's PERSISTED PQ store for `dir`: trained on the full
     * corpus, data tier built on the EVEN vec_ids, the odd half
@@ -2558,7 +2573,7 @@ object Knn {
   def writeNnGraphStore(graph: DataFrame, path: String): Unit = {
     import graph.sparkSession.implicits._
     graph.select($"q_id", $"vec_id")
-      .withColumn("nbucket", pmod($"q_id", lit(GraphBuckets.toLong)))
+      .withColumn("nbucket", bucketOf($"q_id"))
       .write.mode("overwrite").partitionBy("nbucket").parquet(path)
   }
 
@@ -2575,7 +2590,7 @@ object Knn {
                       valCol: String = "v"): Unit = {
     import vecs.sparkSession.implicits._
     vecs.select($"vec_id", col(valCol))
-      .withColumn("vbucket", pmod($"vec_id", lit(GraphBuckets.toLong)))
+      .withColumn("vbucket", bucketOf($"vec_id"))
       .write.mode("overwrite").partitionBy("vbucket").parquet(path)
   }
 
@@ -2586,76 +2601,38 @@ object Knn {
   }
 
   /** Id-scoped vector upsert: arriving ids replace their old copies;
-    * only the touched vbuckets rewrite (dynamic overwrite — every
-    * touched bucket gains the arriving rows, so no bucket empties). */
+    * only the touched vbuckets rewrite. A table not written yet takes
+    * the batch as its first write. */
   def upsertNnVecStore(spark: SparkSession, path: String,
                        vecs: DataFrame, valCol: String = "v"): Unit = {
     import spark.implicits._
     val d = vecs.select($"vec_id", col(valCol))
-      .withColumn("vbucket", pmod($"vec_id", lit(GraphBuckets.toLong)))
-    val survivors = spark.read.parquet(path)
-      .join(d.select($"vbucket").distinct(), Seq("vbucket"), "left_semi")
-      .join(d.select($"vec_id").distinct(), Seq("vec_id"), "left_anti")
-    d.unionByName(survivors.select(d.columns.map(col): _*))
-      .localCheckpoint(true)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("vbucket").parquet(path)
+      .withColumn("vbucket", bucketOf($"vec_id"))
+    replaceRows(spark, path, "vbucket", "vec_id", partsOf(d, $"vbucket"),
+      d, Some(d))
   }
 
-  /** Id-scoped vector delete: the ids' buckets rewrite without them;
-    * a bucket whose every row died is explicitly dropped (dynamic
-    * overwrite can't write an empty partition — the
-    * rewriteTouchedCells rule). */
+  /** Id-scoped vector delete: the ids' buckets rewrite without them
+    * (a bucket whose every row died is dropped). No-op on a table not
+    * written yet. */
   def deleteFromNnVecStore(spark: SparkSession, path: String,
-                           ids: DataFrame, valCol: String = "v"): Unit = {
+                           ids: DataFrame): Unit = {
     import spark.implicits._
-    val dead = ids.select($"vec_id").distinct()
-      .withColumn("vbucket", pmod($"vec_id", lit(GraphBuckets.toLong)))
-      .localCheckpoint(true)
-    // re-derive vbucket with the shared pmod expression: the
-    // partition-DISCOVERED column comes back as Integer and the
-    // bucket bookkeeping below collects longs
-    val kept = spark.read.parquet(path)
-      .join(dead.select($"vbucket").distinct(), Seq("vbucket"), "left_semi")
-      .join(dead.select($"vec_id"), Seq("vec_id"), "left_anti")
-      .select($"vec_id", col(valCol),
-        pmod($"vec_id", lit(GraphBuckets.toLong)).as("vbucket"))
-      .localCheckpoint(true)
-    kept.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("vbucket").parquet(path)
-    val affB = dead.select($"vbucket").distinct()
-      .collect().map(_.getLong(0)).toSet
-    val wrB = kept.select($"vbucket").distinct()
-      .collect().map(_.getLong(0)).toSet
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    (affB -- wrB).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/vbucket=$b"), true): Unit
-    }
+    val dead = ids.select($"vec_id").distinct().localCheckpoint(true)
+    replaceRows(spark, path, "vbucket", "vec_id",
+      partsOf(dead, bucketOf($"vec_id")), dead)
   }
 
-  /** Apply an [[appendToNnGraphDelta]] to the store: survivors of
-    * the AFFECTED buckets are read (every other bucket is untouched
-    * on disk), the rewritten nodes' old rows anti-join away, and
-    * only those buckets rewrite via dynamic partition overwrite.
-    * localCheckpoint breaks the read→overwrite cycle (the reingest
-    * discipline). */
+  /** Apply an [[appendToNnGraphDelta]] to the store: the rewritten
+    * nodes' old rows leave and the delta lands, in the delta's
+    * buckets only. */
   def upsertNnGraphStore(spark: SparkSession, path: String,
                          delta: DataFrame): Unit = {
     import spark.implicits._
-    val data = storeDataDir(spark, path)
     val d = delta.select($"q_id", $"vec_id")
-      .withColumn("nbucket", pmod($"q_id", lit(GraphBuckets.toLong)))
-    val survivors = spark.read.parquet(data)
-      .join(d.select($"nbucket").distinct(), Seq("nbucket"), "left_semi")
-      .join(d.select($"q_id").distinct(), Seq("q_id"), "left_anti")
-    d.unionByName(survivors.select(d.columns.map(col): _*))
-      .localCheckpoint(true)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("nbucket").parquet(data)
+      .withColumn("nbucket", bucketOf($"q_id"))
+    replaceRows(spark, storeDataDir(spark, path), "nbucket", "q_id",
+      partsOf(d, $"nbucket"), d, Some(d))
   }
 
   def readNnGraphStore(spark: SparkSession, path: String): DataFrame = {
@@ -2691,8 +2668,8 @@ object Knn {
         vamanaDeleteOf(graph, dead, vecs, alpha, degreeCap, poolCap))
 
   /** Shared store-side delete applier: run `consolidate` on the
-    * loaded graph, then rewrite ONLY the buckets carrying dead
-    * sources or changed nodes via dynamic partition overwrite. */
+    * loaded graph, then rewrite ONLY the buckets carrying dead sources
+    * or changed nodes (those that pointed at a dead node). */
   private def applyGraphStoreDelete(spark: SparkSession, path: String,
                                     deadIds: DataFrame,
                                     consolidate: (DataFrame, DataFrame)
@@ -2700,80 +2677,28 @@ object Knn {
     import spark.implicits._
     val dead = deadIds.select($"vec_id").distinct().localCheckpoint(true)
     val graph = readNnGraphStore(spark, path)
-    val newGraph = consolidate(graph, dead)
-    // affected sources: dead nodes (rows must vanish) + nodes whose
-    // edge set changed (pointed at a dead node)
-    val affected = graph.join(dead, Seq("vec_id"), "left_semi")
-      .select($"q_id")
-      .unionByName(dead.select($"vec_id".as("q_id")))
-      .distinct()
-      .withColumn("nbucket", pmod($"q_id", lit(GraphBuckets.toLong)))
-      .localCheckpoint(true)
-    val rewrite = newGraph
-      .withColumn("nbucket", pmod($"q_id", lit(GraphBuckets.toLong)))
-      .join(affected.select($"nbucket").distinct(), Seq("nbucket"),
-        "left_semi")
-      .localCheckpoint(true)
-    val data = storeDataDir(spark, path)
-    rewrite.select($"q_id", $"vec_id", $"nbucket")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("nbucket").parquet(data)
-    // dynamic overwrite only replaces partitions PRESENT in the
-    // written data — an affected bucket whose every node died writes
-    // nothing and would keep its old files; drop those explicitly
-    // (bounded: ≤ GraphBuckets values)
-    val affB = affected.select($"nbucket").distinct()
-      .collect().map(_.getLong(0)).toSet
-    val wrB = rewrite.select($"nbucket").distinct()
-      .collect().map(_.getLong(0)).toSet
-    val fs = new org.apache.hadoop.fs.Path(data)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    (affB -- wrB).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$data/nbucket=$b"), true): Unit
-    }
+    val touched = partsOf(graph.join(dead, Seq("vec_id"), "left_semi")
+      .select($"q_id").unionByName(dead.select($"vec_id".as("q_id"))),
+      bucketOf($"q_id"))
+    rewriteParts(spark, storeDataDir(spark, path), "nbucket", touched,
+      consolidate(graph, dead).withColumn("nbucket", bucketOf($"q_id"))
+        .filter($"nbucket".isin(touched: _*)))
   }
 
-  /** COMPACT the kNN-graph edge store: rewrite every bucket one
-    * file each — the graph store deletes physically, so the only
-    * compaction signal is the small-file curve each bucket
-    * upsert's multi-task write leaves behind. The edge SET is
-    * unchanged (the spec pins read-back equality). Staged-commit
-    * like [[optimizeIvfIndex]]: the full rewritten layout lands
-    * under `_gen_N+1` and ONE `_gen` marker flip commits it — a
-    * crash mid-rewrite leaves readers on generation N, with the
-    * root's side metadata (_epoch, a maintenance stream's
-    * _checkpoints) untouched throughout. */
-  def compactNnGraphStore(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
-    val gen = storeGen(spark, path)
-    // reads gen N, writes gen N+1 — disjoint dirs, so the rewrite
-    // streams with no read->overwrite cycle to break
-    spark.read.parquet(storeDataDir(spark, path))
-      .select($"q_id", $"vec_id", $"nbucket")
-      .repartition(col("nbucket"))
-      .write.mode("overwrite")
-      .partitionBy("nbucket").parquet(s"$path/_gen_${gen + 1}")
-    commitStoreGen(spark, path, gen + 1, _.startsWith("nbucket="))
-  }
+  /** COMPACT the kNN-graph edge store: every bucket rewrites to one
+    * file as one generation commit (see the ANN-store contract) — the
+    * graph store deletes physically, so the small-file curve its
+    * bucket rewrites leave is the only compaction signal. The edge SET
+    * is unchanged (the spec pins read-back equality). */
+  def compactNnGraphStore(spark: SparkSession, path: String): Unit =
+    optimizeStore(spark, path, "nbucket", Seq(""))
 
-  /** COUNT-GATED auto-compaction for the graph store — the
-    * TextIndex.maybeCompact pattern with the one signal this store
-    * has: files-per-bucket from the LISTING alone (no data scan).
-    * Fires [[compactNnGraphStore]] past the bound, which resets the
-    * curve to one file per bucket. Returns whether a rewrite ran. */
+  /** COUNT-GATED auto-compaction for the graph store on its one
+    * signal, files per bucket; fires [[compactNnGraphStore]]. Returns
+    * whether a rewrite ran. */
   def maybeCompactNnGraph(spark: SparkSession, path: String,
-                          maxFilesPerBucket: Double = 4.0): Boolean = {
-    import spark.implicits._
-    val files = graft.sources.Compaction
-      .listFiles(spark, storeDataDir(spark, path))
-      .groupBy($"partition").agg(count(lit(1)).as("n"))
-      .agg(coalesce(avg($"n"), lit(0.0)).as("avg_files"))
-      .head().getDouble(0)
-    val due = files > maxFilesPerBucket
-    if (due) compactNnGraphStore(spark, path)
-    due
-  }
+                          maxFilesPerBucket: Double = 4.0): Boolean =
+    optimizeIfDue(spark, path, "nbucket", Seq(""), maxFilesPerBucket, None)
 
   /** The NN-Descent build as SHARED per-round materializations —
     * built once per corpus, read by BOTH consumers: a21's per-round
@@ -3643,29 +3568,20 @@ object Knn {
 
   /** Id-scoped codes upsert: arriving vectors re-encode under the
     * frozen codebooks and replace their old code rows (a re-embed's
-    * code is stale the moment its vector changes — this is the
-    * codes-tier half of the remove-then-add contract). A store
-    * whose codes tier doesn't exist yet builds it from the batch. */
+    * code is stale the moment its vector changes — the codes-tier half
+    * of remove-then-add). A store whose codes tier doesn't exist yet
+    * builds it from the batch. */
   def upsertGraphPqCodes(spark: SparkSession, path: String,
-                         vecs: DataFrame): Unit = {
-    val coded = encodeGraphPqCodes(spark, path, vecs)
-    val c = new org.apache.hadoop.fs.Path(s"$path/codes")
-    if (c.getFileSystem(spark.sessionState.newHadoopConf()).exists(c))
-      upsertNnVecStore(spark, s"$path/codes", coded, valCol = "code")
-    else writeNnVecStore(coded, s"$path/codes", valCol = "code")
-  }
+                         vecs: DataFrame): Unit =
+    upsertNnVecStore(spark, s"$path/codes",
+      encodeGraphPqCodes(spark, path, vecs), valCol = "code")
 
   /** Id-scoped codes delete — physical, like the graph/vector tiers
-    * (the walk joins codes by vec_id, so a surviving dead code is
-    * unreachable but still scan weight; dropping the bucket rows is
-    * one touched-bucket rewrite). No-op before the tier exists
-    * (a delete-only first epoch). */
+    * (a surviving dead code is unreachable but still scan weight).
+    * No-op before the tier exists (a delete-only first epoch). */
   def deleteGraphPqCodes(spark: SparkSession, path: String,
-                         ids: DataFrame): Unit = {
-    val c = new org.apache.hadoop.fs.Path(s"$path/codes")
-    if (c.getFileSystem(spark.sessionState.newHadoopConf()).exists(c))
-      deleteFromNnVecStore(spark, s"$path/codes", ids, valCol = "code")
-  }
+                         ids: DataFrame): Unit =
+    deleteFromNnVecStore(spark, s"$path/codes", ids)
 
   /** The stored codebooks of a [[writeGraphPqStore]] layout. */
   private[graft] def readCodebooks(spark: SparkSession,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{ChunkQueries, Chunker}
+import graft.operators.{ChunkQueries, Chunker, Knn}
 
 /** Continuous document ingestion — the reference's queue-worker
   * pipeline (NSQ ingest → chunker → embedder consumer → vector store;
@@ -434,217 +434,129 @@ object IngestStream {
       .start()
   }
 
-  /** STREAMING maintenance of a persisted IVF vector store —
-    * [[syncIndexStream]]'s twin on the ANN tier (the reference keeps
-    * Weaviate's vector index current on every re-embed; this is the
-    * lakehouse form): each micro-batch carries (vec_id, v) re-embed
-    * results plus (vec_id, NULL) delete notices. Fresh vectors apply
-    * through Knn.upsertIvfIndex (FAISS remove-then-add under the
-    * FROZEN quantizer — old copies' cells physically cleaned even
-    * when the vector moved cells), deletes tombstone, and the
-    * count-gated auto-OPTIMIZE check runs per epoch. At-least-once
-    * replay is safe: the epoch marker gates committed epochs, and a
-    * crashed half-epoch re-runs remove-then-add, which converges.
-    * First epoch against an empty path BUILDS the store (assign +
-    * append under the given quantizer). */
-  def ivfIndexStream(vectors: DataFrame, path: String,
-                     cents: Seq[Seq[Double]],
-                     maxTombstones: Long = 10000L,
-                     maxFilesPerCell: Double = 16.0): StreamingQuery = {
-    import graft.operators.Knn
+  /** THE epoch driver of every ANN-store maintenance stream (the
+    * replay contract is Knn's ANN-store contract): an epoch at or
+    * below the store's `_epoch` marker is a re-delivered committed one
+    * and is skipped; otherwise `apply` runs the epoch's mutations on
+    * its (vec_id, v) batch — (vec_id, NULL) rows are delete notices —
+    * the marker advances only after they landed, and `compact` runs
+    * the store's count gate. Offsets checkpoint under the store's
+    * `_checkpoints`. */
+  private def storeStream(updates: DataFrame, path: String)(
+      apply: (SparkSession, DataFrame) => Unit,
+      compact: SparkSession => Boolean): StreamingQuery = {
     val epochFn: (DataFrame, Long) => Unit = (batch, epochId) => {
       val spark = batch.sparkSession
-      import spark.implicits._
       if (epochId > Knn.storeLastEpoch(spark, path)) {
-        val b = batch.select("vec_id", "v")
-        val ups = b.filter($"v".isNotNull).localCheckpoint(true)
-        val dels = b.filter($"v".isNull).select($"vec_id")
-          .localCheckpoint(true)
-        // data probe, not a root probe: the stream's own checkpoint
-        // directory creates the root before the first batch arrives.
-        // Probed on the CURRENT GENERATION's data dir — after an
-        // in-stream OPTIMIZE flips `_gen`, the root has no cid=
-        // children and a root probe would mistake the committed
-        // store for an empty one, appending re-embeds WITHOUT the
-        // upsert's remove step (stale+fresh copies both served)
-        val storeDir = new org.apache.hadoop.fs.Path(
-          Knn.storeDataDir(spark, path))
-        val fs = storeDir
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val exists = fs.exists(storeDir) &&
-          fs.listStatus(storeDir).exists(_.getPath.getName.startsWith("cid="))
-        if (!exists) {
-          // guard the build on a non-empty batch: a delete-only
-          // first epoch must not write an empty cell-less frame
-          // (its _SUCCESS-only dir would wedge every later read)
-          if (ups.count() > 0) {
-            Knn.appendToIvfIndex(path, cents, ups)
-            // a delete-only epoch can precede the first build, leaving
-            // tombstones with no cells; the arriving ids revive exactly
-            // like upsertIvfIndex's tombstone clear (same-batch deletes
-            // still win — they re-tombstone below, AFTER this)
-            Knn.clearIvfTombstones(spark, path, ups.select($"vec_id"))
-          }
-        }
-        else if (ups.count() > 0) Knn.upsertIvfIndex(spark, path, cents, ups)
-        if (dels.count() > 0) Knn.deleteFromIvfIndex(spark, path, dels)
+        apply(spark, batch.select("vec_id", "v"))
         Knn.writeStoreEpoch(spark, path, epochId)
-        Knn.maybeCompactIvf(spark, path, maxTombstones,
-          maxFilesPerCell): Unit
-      }
-    }
-    vectors.writeStream
-      .option("checkpointLocation", s"$path/_checkpoints")
-      .foreachBatch(epochFn)
-      .start()
-  }
-
-  /** STREAMING maintenance of the persisted PQ store —
-    * [[ivfIndexStream]]'s twin on the codes tier: the quantizer pair
-    * is trained and persisted UP FRONT (Knn.writePqQuantizer — the
-    * FAISS train-once/add-forever contract), and every micro-batch's
-    * (vec_id, v) re-embeds apply through Knn.upsertPqIndex
-    * (remove-then-add across BOTH tiers, old cells cleaned even when
-    * the vector moved), (vec_id, NULL) notices tombstone, and the
-    * count-gated auto-OPTIMIZE check runs per epoch. Same replay
-    * contract: the `_epoch` marker gates committed epochs; a crashed
-    * half-epoch re-runs remove-then-add, which converges. */
-  def pqIndexStream(vectors: DataFrame, path: String,
-                    maxTombstones: Long = 10000L,
-                    maxFilesPerCell: Double = 16.0): StreamingQuery = {
-    import graft.operators.Knn
-    val epochFn: (DataFrame, Long) => Unit = (batch, epochId) => {
-      val spark = batch.sparkSession
-      import spark.implicits._
-      if (epochId > Knn.storeLastEpoch(spark, path)) {
-        val b = batch.select("vec_id", "v")
-        val ups = b.filter($"v".isNotNull).localCheckpoint(true)
-        val dels = b.filter($"v".isNull).select($"vec_id")
-          .localCheckpoint(true)
-        // the build/maintain probe checks the VECTORS tier for cid=
-        // data children — vectors are written LAST by the build, so
-        // their committed cells mean both tiers landed; a crash
-        // between the build's two tier writes replays into the
-        // build branch, which wipes the torn codes-only layout and
-        // re-runs (the epoch marker never advanced, so the torn
-        // state is entirely this epoch's). A bare existence probe
-        // (or probing codes, written first) would wedge the stream
-        // on exactly that torn state — and it is gen-aware via
-        // storeDataDir, so a post-OPTIMIZE flip keeps routing
-        // re-embeds through the upsert's remove step.
-        val data = Knn.storeDataDir(spark, path)
-        val vecsDir = new org.apache.hadoop.fs.Path(s"$data/vectors")
-        val fs = vecsDir
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val exists = fs.exists(vecsDir) &&
-          fs.listStatus(vecsDir).exists(_.getPath.getName.startsWith("cid="))
-        if (!exists) {
-          // delete-only first epoch: build nothing (an empty append
-          // would leave a _SUCCESS-only dir that wedges later reads)
-          if (ups.count() > 0) {
-            // wipe a torn half-build before re-running it — blind
-            // re-append would duplicate the codes rows
-            Seq(s"$data/codes", s"$data/vectors").foreach { t =>
-              val p = new org.apache.hadoop.fs.Path(t)
-              if (fs.exists(p)) fs.delete(p, true): Unit
-            }
-            Knn.appendToPqIndex(spark, path, ups)
-            Knn.clearIvfTombstones(spark, path, ups.select($"vec_id"))
-          }
-        }
-        else if (ups.count() > 0) Knn.upsertPqIndex(spark, path, ups)
-        if (dels.count() > 0) Knn.deleteFromIvfIndex(spark, path, dels)
-        Knn.writeStoreEpoch(spark, path, epochId)
-        Knn.maybeCompactPq(spark, path, maxTombstones,
-          maxFilesPerCell): Unit
-      }
-    }
-    vectors.writeStream
-      .option("checkpointLocation", s"$path/_checkpoints")
-      .foreachBatch(epochFn)
-      .start()
-  }
-
-  /** STREAMING maintenance of a persisted VAMANA store — the
-    * FreshDiskANN freshness loop with the α-RNG kernels end to end:
-    * inserts wire in through DiskANN's §4 insert
-    * (Knn.insertIntoVamanaStore — walk-visited pool → RobustPrune →
-    * backlink re-prune, touched buckets only), delete notices
-    * consolidate through the α-RNG rule
-    * (Knn.deleteFromVamanaStore), and the first epoch BUILDS from
-    * its own batch (NN-descent seed + robust prune — the batch
-    * vamana recipe). Same staging, replay-marker, remove-then-add
-    * and per-epoch compaction contract as [[nnGraphStream]]; the
-    * two streams differ ONLY in which consolidation/insert kernels
-    * they call, which is the point — the serving walk over this
-    * store stays at the published DiskANN operating point as the
-    * corpus churns, instead of degrading toward raw top-k edges. */
-  def vamanaStream(updates: DataFrame, path: String,
-                   alpha: Double = 1.2, degreeCap: Int = 6,
-                   poolCap: Int = 12, k: Int = 3): StreamingQuery = {
-    import graft.operators.Knn
-    val graphPath = s"$path/graph"
-    val vecPath = s"$path/vectors"
-    val epochFn: (DataFrame, Long) => Unit = (batch, epochId) =>
-      graft.Caches.scoped {
-      val spark = batch.sparkSession
-      import spark.implicits._
-      if (epochId > Knn.storeLastEpoch(spark, path)) {
-        val b = batch.select("vec_id", "v")
-        val delsRaw = b.filter($"v".isNull).select($"vec_id")
-        // staged, delete-wins: the file-backed batch discipline of
-        // applyGraphEpoch (the in-memory Union lineage quirk)
-        b.filter($"v".isNotNull)
-          .join(delsRaw, Seq("vec_id"), "left_anti")
-          .write.mode("overwrite").parquet(s"$path/_stage/ups")
-        val ups = spark.read.parquet(s"$path/_stage/ups")
-        val dels = delsRaw.localCheckpoint(true)
-        val gDir = new org.apache.hadoop.fs.Path(
-          Knn.storeDataDir(spark, graphPath))
-        val fs = gDir
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val exists = fs.exists(gDir) && fs.listStatus(gDir)
-          .exists(_.getPath.getName.startsWith("nbucket="))
-        if (!exists) {
-          if (ups.count() > 0) {
-            val init = Knn.knnJoinOf(ups, tables = 4, bits = 6, k = k,
-              bucketCap = 256).select($"q_id", $"vec_id")
-            val (g, _) = Knn.nnDescentBuild(ups.select($"vec_id", $"v"),
-              init, k, maxRounds = 2)
-            val pruned = Knn.robustPrune(g.localCheckpoint(true),
-              ups.select($"vec_id", $"v"), alpha, degreeCap, poolCap)
-            Knn.writeNnVecStore(ups, vecPath)
-            Knn.writeNnGraphStore(pruned.localCheckpoint(true), graphPath)
-          }
-        } else {
-          if (ups.count() > 0) {
-            val stored = Knn.readNnVecStore(spark, vecPath)
-            val present = stored
-              .join(ups.select($"vec_id"), Seq("vec_id"), "left_semi")
-              .select($"vec_id").localCheckpoint(true)
-            if (present.count() > 0) {
-              Knn.deleteFromVamanaStore(spark, graphPath, present,
-                stored, alpha, degreeCap, poolCap)
-              Knn.deleteFromNnVecStore(spark, vecPath, present)
-            }
-            Knn.insertIntoVamanaStore(spark, graphPath, vecPath, ups,
-              alpha, degreeCap, poolCap)
-          }
-          if (dels.count() > 0) {
-            Knn.deleteFromVamanaStore(spark, graphPath, dels,
-              Knn.readNnVecStore(spark, vecPath), alpha, degreeCap,
-              poolCap)
-            Knn.deleteFromNnVecStore(spark, vecPath, dels)
-          }
-        }
-        Knn.writeStoreEpoch(spark, path, epochId)
-        Knn.maybeCompactNnGraph(spark, graphPath): Unit
+        compact(spark): Unit
       }
     }
     updates.writeStream
       .option("checkpointLocation", s"$path/_checkpoints")
       .foreachBatch(epochFn)
       .start()
+  }
+
+  /** One epoch of a VECTOR store (IVF or PQ, told apart by their tier
+    * lists and kernels): the first epoch with vectors BUILDS the store
+    * (`build`: assign/encode + append under the up-front quantizer),
+    * later ones `upsert` (remove-then-add, old cells cleaned even when
+    * a vector moved), and delete notices tombstone.
+    *
+    * The build probe asks whether EVERY tier of the current generation
+    * holds cells: a root probe would see the stream's own checkpoint
+    * dir, or miss a store whose in-stream OPTIMIZE moved it to
+    * `_gen_N` (appending re-embeds without the remove step), and a
+    * one-tier probe would route a first build torn between its tier
+    * writes into an upsert that reads the missing tier — on every
+    * replay. A torn build's tiers are wiped before it re-runs (blind
+    * re-append would duplicate rows); the epoch marker never advanced,
+    * so the torn state is entirely this epoch's. */
+  private def vectorStoreEpoch(spark: SparkSession, b: DataFrame,
+                               path: String, tiers: Seq[String],
+                               build: DataFrame => Unit,
+                               upsert: DataFrame => Unit): Unit = {
+    import spark.implicits._
+    val ups = b.filter($"v".isNotNull).localCheckpoint(true)
+    val dels = b.filter($"v".isNull).select($"vec_id").localCheckpoint(true)
+    if (!Knn.storeBuilt(spark, path, "cid", tiers)) {
+      // a delete-only first epoch builds nothing: an empty write would
+      // leave a cell-less dir that wedges every later read
+      if (ups.count() > 0) {
+        Knn.wipeTiers(spark, path, tiers)
+        build(ups)
+        // a delete notice can precede the first build; the arriving
+        // ids revive like an upsert's (same-batch deletes still win —
+        // they re-tombstone below)
+        Knn.clearIvfTombstones(spark, path, ups.select($"vec_id"))
+      }
+    }
+    else if (ups.count() > 0) upsert(ups)
+    if (dels.count() > 0) Knn.deleteFromIvfIndex(spark, path, dels)
+  }
+
+  /** STREAMING maintenance of a persisted IVF vector store —
+    * [[syncIndexStream]]'s twin on the ANN tier (the reference keeps
+    * Weaviate's vector index current on every re-embed; this is the
+    * lakehouse form): each micro-batch carries (vec_id, v) re-embed
+    * results plus (vec_id, NULL) delete notices. Fresh vectors apply
+    * through Knn.upsertIvfIndex (FAISS remove-then-add under the
+    * FROZEN quantizer), deletes tombstone, and the count-gated
+    * auto-OPTIMIZE check runs per epoch. The first epoch against an
+    * empty path BUILDS the store under the given quantizer. */
+  def ivfIndexStream(vectors: DataFrame, path: String,
+                     cents: Seq[Seq[Double]],
+                     maxTombstones: Long = 10000L,
+                     maxFilesPerCell: Double = 16.0): StreamingQuery =
+    storeStream(vectors, path)(
+      (spark, b) => vectorStoreEpoch(spark, b, path, Knn.IvfTiers,
+        Knn.appendToIvfIndex(path, cents, _),
+        Knn.upsertIvfIndex(spark, path, cents, _)),
+      Knn.maybeCompactIvf(_, path, maxTombstones, maxFilesPerCell))
+
+  /** STREAMING maintenance of the persisted PQ store —
+    * [[ivfIndexStream]]'s twin on the codes tier: the quantizer pair
+    * is trained and persisted UP FRONT (Knn.writePqQuantizer — the
+    * FAISS train-once/add-forever contract), and every micro-batch's
+    * re-embeds apply through Knn.upsertPqIndex (remove-then-add across
+    * BOTH tiers), delete notices tombstone, and the count-gated
+    * auto-OPTIMIZE check runs per epoch. */
+  def pqIndexStream(vectors: DataFrame, path: String,
+                    maxTombstones: Long = 10000L,
+                    maxFilesPerCell: Double = 16.0): StreamingQuery =
+    storeStream(vectors, path)(
+      (spark, b) => vectorStoreEpoch(spark, b, path, Knn.PqTiers,
+        Knn.appendToPqIndex(spark, path, _),
+        Knn.upsertPqIndex(spark, path, _)),
+      Knn.maybeCompactPq(_, path, maxTombstones, maxFilesPerCell))
+
+  /** STREAMING maintenance of a persisted VAMANA store — the
+    * FreshDiskANN freshness loop with the α-RNG kernels end to end:
+    * inserts wire in through DiskANN's §4 insert
+    * (Knn.insertIntoVamanaStore — walk-visited pool → RobustPrune →
+    * backlink re-prune, touched buckets only), delete notices
+    * consolidate through the α-RNG rule (Knn.deleteFromVamanaStore),
+    * and the first epoch BUILDS from its own batch (NN-descent seed +
+    * robust prune — the batch vamana recipe). It is [[nnGraphStream]]
+    * with other kernels, so the serving walk over this store stays at
+    * the published DiskANN operating point as the corpus churns,
+    * instead of degrading toward raw top-k edges. */
+  def vamanaStream(updates: DataFrame, path: String,
+                   alpha: Double = 1.2, degreeCap: Int = 6,
+                   poolCap: Int = 12, k: Int = 3): StreamingQuery = {
+    val kernels = GraphKernels(
+      prune = (g, v) =>
+        Knn.robustPrune(g, v, alpha, degreeCap, poolCap).localCheckpoint(true),
+      consolidate = (graphPath, dead, v) => Knn.deleteFromVamanaStore(
+        dead.sparkSession, graphPath, dead, v, alpha, degreeCap, poolCap),
+      insert = (graphPath, vecPath, ups) => Knn.insertIntoVamanaStore(
+        ups.sparkSession, graphPath, vecPath, ups, alpha, degreeCap,
+        poolCap))
+    storeStream(updates, path)(
+      applyGraphEpoch(_, _, path, k, kernels),
+      Knn.maybeCompactNnGraph(_, s"$path/graph"))
   }
 
   /** STREAMING maintenance of the persisted kNN-GRAPH store plus its
@@ -665,48 +577,67 @@ object IngestStream {
     * inside an epoch, like the other two tiers). Per-epoch
     * count-gated compaction.
     *
-    * Replay contract: the `_epoch` marker gates COMMITTED epochs
-    * (never applied twice), and a crashed half-epoch replays as
-    * REMOVE-THEN-ADD — arriving ids already present in the vector
-    * store (a replayed half-epoch, or a re-embed) are
-    * delete-consolidated out of both stores first, so the delta
-    * always computes against a graph without the batch. The
-    * replayed state is a valid consolidated graph (k best-available
-    * edges per node, no dangling edges, no duplicates); it is NOT
-    * promised digit-equal to the uncrashed application — the same
-    * contract FreshDiskANN's crash recovery gives (Singh et al.
-    * 2021 §3.4: rebuild the delta from the last durable snapshot).
-    * Remove-then-add is also what makes RE-EMBEDS correct here:
-    * stale inbound edges scored against the old vector are
-    * consolidated away rather than surviving untouched. */
+    * Replay: a crashed half-epoch replays as REMOVE-THEN-ADD —
+    * arriving ids already present in the vector store (a replayed
+    * half-epoch, or a re-embed) are delete-consolidated out of both
+    * stores first, so the delta always computes against a graph
+    * without the batch. The replayed state is a valid consolidated
+    * graph (k best-available edges per node, no dangling edges, no
+    * duplicates); it is NOT promised digit-equal to the uncrashed
+    * application — the same contract FreshDiskANN's crash recovery
+    * gives (Singh et al. 2021 §3.4: rebuild the delta from the last
+    * durable snapshot). Remove-then-add is also what makes RE-EMBEDS
+    * correct here: stale inbound edges scored against the old vector
+    * are consolidated away rather than surviving untouched. */
   def nnGraphStream(updates: DataFrame, path: String, k: Int = 3)
-      : StreamingQuery = {
-    import graft.operators.Knn
-    // Caches.scoped: the descent/delta kernels persist their vector
-    // side per call — without a per-epoch release, a long-running
-    // stream accumulates one pinned vector-table copy per epoch
-    val epochFn: (DataFrame, Long) => Unit = (batch, epochId) =>
-      graft.Caches.scoped {
-      val spark = batch.sparkSession
-      if (epochId > Knn.storeLastEpoch(spark, path)) {
-        applyGraphEpoch(spark, batch, path, k): Unit
-        Knn.writeStoreEpoch(spark, path, epochId)
-        Knn.maybeCompactNnGraph(spark, s"$path/graph"): Unit
-      }
-    }
-    updates.writeStream
-      .option("checkpointLocation", s"$path/_checkpoints")
-      .foreachBatch(epochFn)
-      .start()
-  }
+      : StreamingQuery =
+    storeStream(updates, path)(
+      applyGraphEpoch(_, _, path, k, nnGraphKernels(k)),
+      Knn.maybeCompactNnGraph(_, s"$path/graph"))
 
-  /** One graph-store epoch's mutations — [[nnGraphStream]]'s body,
-    * shared with [[graphPqStream]]: stage the batch, build-or-patch
-    * the co-located graph + vector tiers, physical deletes with
-    * consolidation. Returns the staged (ups, dels) so a caller can
-    * co-maintain further tiers from the SAME file-backed batch; does
-    * NOT advance the epoch marker — the caller commits after every
-    * tier it owns has landed.
+  /** The kernels that tell the graph epochs apart: `prune` turns the
+    * first build's NN-descent graph into the stored one (given the
+    * batch vectors), `consolidate` delete-consolidates dead ids out of
+    * the edge store at the graph path against the given vectors, and
+    * `insert` wires arriving vectors into the graph and vector tiers
+    * at the two paths. */
+  private final case class GraphKernels(
+      prune: (DataFrame, DataFrame) => DataFrame,
+      consolidate: (String, DataFrame, DataFrame) => Unit,
+      insert: (String, String, DataFrame) => Unit)
+
+  /** NN-descent's kernels: the descent graph stored as is, top-k
+    * rerank consolidation, and the incremental delta insert. */
+  private def nnGraphKernels(k: Int): GraphKernels = GraphKernels(
+    prune = (g, _) => g,
+    consolidate = (graphPath, dead, v) =>
+      Knn.deleteFromNnGraphStore(dead.sparkSession, graphPath, dead, v, k),
+    insert = (graphPath, vecPath, ups) => {
+      val spark = ups.sparkSession
+      import spark.implicits._
+      // vectors land BEFORE the edge delta: a crash between the two
+      // replays as remove-then-add (the present check sees the
+      // half-applied ids), never as a second delta over an
+      // already-patched graph
+      Knn.upsertNnVecStore(spark, vecPath, ups)
+      // the checkpoint is a CACHE-ISOLATION boundary, not a lineage
+      // fix: the delta kernels persist their vector side, and a
+      // persisted raw file-relation of this MUTABLE path would
+      // plan-match a later epoch's fresh read onto the stale file
+      // listing (reading bucket files a later delete removed)
+      val all = Knn.readNnVecStore(spark, vecPath).localCheckpoint(true)
+      val delta = Knn.appendToNnGraphDelta(
+        Knn.readNnGraphStore(spark, graphPath), all, ups.select($"vec_id"), k)
+      Knn.upsertNnGraphStore(spark, graphPath, delta.localCheckpoint(true))
+    })
+
+  /** One graph-store epoch's mutations — the body of
+    * [[nnGraphStream]], [[vamanaStream]] and [[graphPqStream]]: stage
+    * the batch, build-or-patch the co-located graph + vector tiers
+    * with `kernels`, physical deletes with consolidation. Runs under
+    * Caches.scoped: the descent/delta kernels persist their vector
+    * side per call, and without a per-epoch release a long-running
+    * stream would pin one vector-table copy per epoch.
     *
     * `codesUpsert`/`codesDelete`: a caller co-maintaining a CODES
     * tier passes its mutations here so they run as a CONCURRENT job
@@ -718,12 +649,11 @@ object IngestStream {
     * all three tiers: the codes upsert REPLACES rows and the codes
     * delete is idempotent, so tier landing ORDER within the epoch is
     * free. */
-  private def applyGraphEpoch(spark: SparkSession, batch: DataFrame,
-                              path: String, k: Int,
+  private def applyGraphEpoch(spark: SparkSession, b: DataFrame,
+                              path: String, k: Int, kernels: GraphKernels,
                               codesUpsert: Option[DataFrame => Unit] = None,
                               codesDelete: Option[DataFrame => Unit] = None)
-      : (DataFrame, DataFrame) = {
-    import graft.operators.Knn
+      : Unit = graft.Caches.scoped {
     import spark.implicits._
     val graphPath = s"$path/graph"
     val vecPath = s"$path/vectors"
@@ -734,138 +664,88 @@ object IngestStream {
       case Some(h) => graft.Par.run(Seq(() => chain, () => h(arg)))
       case None => chain
     }
-    val b = batch.select("vec_id", "v")
-        // the insert batch STAGES to parquet and is read back: the
-        // graph kernels union branches derived from one source, and
-        // Spark's Union constraint rewrite mis-maps in-memory
-        // (LocalRelation/LogicalRDD) lineage there ("key not found:
-        // vec_id") while file relations are fine — and a staged
-        // epoch batch is what a deployment has anyway
-        val delsRaw = b.filter($"v".isNull).select($"vec_id")
-        // delete wins inside an epoch: a vector inserted AND deleted
-        // in the same batch never enters the stores (and an existing
-        // copy still deletes below) — applied at staging so BOTH
-        // branches read the file-backed, already-filtered batch
-        b.filter($"v".isNotNull)
-          .join(delsRaw, Seq("vec_id"), "left_anti")
-          .write.mode("overwrite").parquet(s"$path/_stage/ups")
-        val ups = spark.read.parquet(s"$path/_stage/ups")
-        val dels = delsRaw.localCheckpoint(true)
-        // generation-aware build probe: after the stream's own
-        // auto-compaction commits a `_gen_N` layout, the graph ROOT
-        // has no nbucket= children — a root probe would mistake the
-        // committed store for empty and the build branch's static
-        // overwrite would replace the whole graph+vector store with
-        // just this micro-batch
-        val gDir = new org.apache.hadoop.fs.Path(
-          Knn.storeDataDir(spark, graphPath))
-        val fs = gDir
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val exists = fs.exists(gDir) && fs.listStatus(gDir)
-          .exists(_.getPath.getName.startsWith("nbucket="))
-        if (!exists) {
-          // delete notices against a store that doesn't exist yet
-          // are no-ops (graph deletes are physical — there is
-          // nothing to hide behind); a delete-only first epoch just
-          // advances the marker
-          if (ups.count() > 0) withCodes(codesUpsert, ups) {
-            val init = Knn.knnJoinOf(ups, tables = 4, bits = 6, k = k,
-              bucketCap = 256).select($"q_id", $"vec_id")
-            val (g, _) = Knn.nnDescentBuild(ups.select($"vec_id", $"v"),
-              init, k, maxRounds = 2)
-            // vectors FIRST: the exists probe is on the graph dir, so
-            // a crash between the writes replays into the build
-            // branch (graph absent) and rewrites both; graph-first
-            // would replay into the else branch and read a vector
-            // store that was never written
-            Knn.writeNnVecStore(ups, vecPath)
-            Knn.writeNnGraphStore(g.localCheckpoint(true), graphPath)
-          }
-        } else {
-          if (ups.count() > 0) withCodes(codesUpsert, ups) {
-            // REMOVE-THEN-ADD (the replay/re-embed contract above):
-            // arriving ids already present consolidate out first
-            val stored = Knn.readNnVecStore(spark, vecPath)
-            val present = stored
-              .join(ups.select($"vec_id"), Seq("vec_id"), "left_semi")
-              .select($"vec_id").localCheckpoint(true)
-            if (present.count() > 0) {
-              Knn.deleteFromNnGraphStore(spark, graphPath, present,
-                stored, k)
-              Knn.deleteFromNnVecStore(spark, vecPath, present)
-            }
-            // vectors land BEFORE the edge delta: a crash between
-            // the two replays as remove-then-add (the present check
-            // sees the half-applied ids), never as a second delta
-            // over an already-patched graph
-            Knn.upsertNnVecStore(spark, vecPath, ups)
-            // the checkpoint is a CACHE-ISOLATION boundary, not a
-            // lineage fix: the delta kernels persist their vector
-            // side, and a persisted raw file-relation of this
-            // MUTABLE path would plan-match a later epoch's fresh
-            // read onto the stale file listing (reading bucket files
-            // a later delete removed)
-            val all = Knn.readNnVecStore(spark, vecPath)
-              .localCheckpoint(true)
-            val delta = Knn.appendToNnGraphDelta(
-              Knn.readNnGraphStore(spark, graphPath), all,
-              ups.select($"vec_id"), k)
-            Knn.upsertNnGraphStore(spark, graphPath,
-              delta.localCheckpoint(true))
-          }
-          if (dels.count() > 0) withCodes(codesDelete, dels) {
-            // ordered: the consolidation READS the vector store, so
-            // the vector delete must follow it — the codes-tier
-            // delete (disjoint directory) overlaps both
-            Knn.deleteFromNnGraphStore(spark, graphPath, dels,
-              Knn.readNnVecStore(spark, vecPath), k)
-            Knn.deleteFromNnVecStore(spark, vecPath, dels)
-          }
+    // the insert batch STAGES to parquet and is read back: the graph
+    // kernels union branches derived from one source, and Spark's
+    // Union constraint rewrite mis-maps in-memory
+    // (LocalRelation/LogicalRDD) lineage there ("key not found:
+    // vec_id") while file relations are fine — and a staged epoch
+    // batch is what a deployment has anyway
+    val delsRaw = b.filter($"v".isNull).select($"vec_id")
+    // delete wins inside an epoch: a vector inserted AND deleted in
+    // the same batch never enters the stores (and an existing copy
+    // still deletes below) — applied at staging so BOTH branches read
+    // the file-backed, already-filtered batch
+    b.filter($"v".isNotNull)
+      .join(delsRaw, Seq("vec_id"), "left_anti")
+      .write.mode("overwrite").parquet(s"$path/_stage/ups")
+    val ups = spark.read.parquet(s"$path/_stage/ups")
+    val dels = delsRaw.localCheckpoint(true)
+    // generation-aware data probe: after the stream's own compaction
+    // commits a `_gen_N` layout the graph ROOT has no nbucket=
+    // children, and the build branch's static overwrite would replace
+    // the whole store with just this micro-batch
+    if (!Knn.storeBuilt(spark, graphPath, "nbucket", Seq(""))) {
+      // delete notices against a store that doesn't exist yet are
+      // no-ops (graph deletes are physical — there is nothing to hide
+      // behind); a delete-only first epoch just advances the marker
+      if (ups.count() > 0) withCodes(codesUpsert, ups) {
+        val vecs = ups.select($"vec_id", $"v")
+        val init = Knn.knnJoinOf(ups, tables = 4, bits = 6, k = k,
+          bucketCap = 256).select($"q_id", $"vec_id")
+        val (g, _) = Knn.nnDescentBuild(vecs, init, k, maxRounds = 2)
+        val graph = kernels.prune(g.localCheckpoint(true), vecs)
+        // vectors FIRST: the build probe is on the graph dir, so a
+        // crash between the writes replays into the build branch
+        // (graph absent) and rewrites both; graph-first would replay
+        // into the else branch and read a vector store never written
+        Knn.writeNnVecStore(ups, vecPath)
+        Knn.writeNnGraphStore(graph, graphPath)
+      }
+    } else {
+      if (ups.count() > 0) withCodes(codesUpsert, ups) {
+        // REMOVE-THEN-ADD (the replay/re-embed contract): arriving ids
+        // already present consolidate out first
+        val stored = Knn.readNnVecStore(spark, vecPath)
+        val present = stored
+          .join(ups.select($"vec_id"), Seq("vec_id"), "left_semi")
+          .select($"vec_id").localCheckpoint(true)
+        if (present.count() > 0) {
+          kernels.consolidate(graphPath, present, stored)
+          Knn.deleteFromNnVecStore(spark, vecPath, present)
         }
-    val staged = (ups, dels)
-    staged
+        kernels.insert(graphPath, vecPath, ups)
+      }
+      if (dels.count() > 0) withCodes(codesDelete, dels) {
+        // ordered: the consolidation READS the vector store, so the
+        // vector delete must follow it — the codes-tier delete
+        // (disjoint directory) overlaps both
+        kernels.consolidate(graphPath, dels, Knn.readNnVecStore(spark, vecPath))
+        Knn.deleteFromNnVecStore(spark, vecPath, dels)
+      }
+    }
   }
 
   /** STREAMING maintenance of the persisted GRAPH+PQ serving tier —
     * [[nnGraphStream]] extended to the DiskANN disk layout proper
     * (a30's store: edges + vectors + PQ codes co-located): every
     * epoch's graph/vector mutations apply through the shared
-    * [[applyGraphEpoch]], then the SAME staged batch maintains the
+    * [[applyGraphEpoch]], and the SAME staged batch maintains the
     * codes tier — arriving vectors re-encode under the store's
     * frozen codebooks and replace their old code rows
     * (Knn.upsertGraphPqCodes), delete notices drop code rows
     * physically (Knn.deleteGraphPqCodes). The quantizer trains and
     * persists UP FRONT (Knn.writeGraphPqQuantizer — FAISS's
-    * train-once/add-forever); each codes-tier mutation runs as a
-    * CONCURRENT job next to the same phase's graph/vector chain
-    * (disjoint directories — the consolidation never reads codes),
-    * and the epoch marker flips only after every tier landed, so a
-    * crashed half-epoch still replays remove-then-add across all
-    * three tiers and converges (the codes upsert replaces rows, the
-    * codes delete is idempotent — landing order within the epoch is
-    * free). Reference anchor: the reference delegates index
-    * freshness to Weaviate's vector store (store.go:105); this is
-    * that loop on the DiskANN layout (Singh et al. 2021,
-    * FreshDiskANN). */
+    * train-once/add-forever). Reference anchor: the reference
+    * delegates index freshness to Weaviate's vector store
+    * (store.go:105); this is that loop on the DiskANN layout (Singh et
+    * al. 2021, FreshDiskANN). */
   def graphPqStream(updates: DataFrame, path: String, k: Int = 3)
-      : StreamingQuery = {
-    import graft.operators.Knn
-    val epochFn: (DataFrame, Long) => Unit = (batch, epochId) =>
-      graft.Caches.scoped {
-      val spark = batch.sparkSession
-      if (epochId > Knn.storeLastEpoch(spark, path)) {
-        applyGraphEpoch(spark, batch, path, k,
-          codesUpsert = Some(u => Knn.upsertGraphPqCodes(spark, path, u)),
-          codesDelete = Some(d => Knn.deleteGraphPqCodes(spark, path, d)))
-        Knn.writeStoreEpoch(spark, path, epochId)
-        Knn.maybeCompactNnGraph(spark, s"$path/graph"): Unit
-      }
-    }
-    updates.writeStream
-      .option("checkpointLocation", s"$path/_checkpoints")
-      .foreachBatch(epochFn)
-      .start()
-  }
+      : StreamingQuery =
+    storeStream(updates, path)(
+      (spark, b) => applyGraphEpoch(spark, b, path, k, nnGraphKernels(k),
+        codesUpsert = Some(Knn.upsertGraphPqCodes(spark, path, _)),
+        codesDelete = Some(Knn.deleteGraphPqCodes(spark, path, _))),
+      Knn.maybeCompactNnGraph(_, s"$path/graph"))
 
   /** Start the ingestion stream into `storePath` (chunks under
     * /chunks partitioned by source, offsets under /_checkpoints). */

@@ -80,6 +80,20 @@ class ChunkerSpec extends SparkSpec {
     assert(!Chunker.isNoiseChunk("```\ncode\n```"))
   }
 
+  test("the noise filter runs after splitting: a 1-3-word tail of over-budget prose is dropped, as in the reference") {
+    // budget 10 tokens = 40 chars: four 9-letter words fit (39 chars),
+    // the fifth starts a new fragment, and the last two words form a
+    // 2-word, 19-char fragment the filter judges as noise
+    val words = Seq("alphabeta", "gammadelt", "epsilonze", "etathetai",
+      "otakappal", "ambdamuxi")
+    val text = words.mkString(" ")
+    val fragments = Chunker.chunkProse(text, 10, 0).map(_.content)
+    assert(fragments == Seq(words.take(4).mkString(" "),
+      words.drop(4).mkString(" ")))
+    assert(Chunker.chunkMarkdown(text, 10, 0).map(_.content) ==
+      Seq(words.take(4).mkString(" ")))
+  }
+
   test("api detection by keyword heuristics") {
     val apiProse = "Endpoint: /v1/users\nMethod: GET\nURL parameters are listed below."
     val chunks = Chunker.chunkMarkdown(apiProse, maxTokens = 100, overlap = 0)
