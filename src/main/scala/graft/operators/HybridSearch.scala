@@ -563,16 +563,19 @@ object HybridSearch {
       .filter($"col".isin(terms: _*))
       .select($"doc_id", ($"pos" + 1).cast("long").as("p"),
         $"col".as("term"))
-    val winScores = hits.select($"doc_id", $"p").distinct()
-      .join(hits.select($"doc_id", $"p".as("q"), $"term"), Seq("doc_id"))
-      .filter($"q" >= $"p" && $"q" < $"p" + window)
-      .groupBy($"doc_id", $"p")
-      .agg(countDistinct($"term").as("n_terms"), count(lit(1)).as("n_hits"))
-    val w = Window.partitionBy($"doc_id")
-      .orderBy($"n_terms".desc, $"n_hits".desc, $"p")
-    val best = winScores
-      .withColumn("rnk", row_number().over(w)).filter($"rnk" === 1)
-      .select($"doc_id", $"p".as("start_pos"), $"n_terms")
+    // one group per doc: each hit start p scores the hits in
+    // [p, p + window) as (−distinct terms, −hits, p), and the least
+    // triple is the best window — array work within the row, so the
+    // grouping is the only exchange
+    val best = hits.groupBy($"doc_id")
+      .agg(collect_list(struct($"p", $"term")).as("hs"))
+      .select($"doc_id", array_min(transform($"hs", h => {
+        val in = filter($"hs", x => x("p") >= h("p") && x("p") < h("p") + window)
+        struct((-size(array_distinct(transform(in, _("term"))))).as("nt"),
+          (-size(in)).as("nh"), h("p").as("p"))
+      })).as("b"))
+      .select($"doc_id", $"b.p".as("start_pos"),
+        (-$"b.nt").cast("long").as("n_terms"))
     val rendered = docs.join(best, Seq("doc_id"), "left")
       .select($"doc_id", $"text".as("content"),
         coalesce($"start_pos", lit(1L)).as("start_pos"),

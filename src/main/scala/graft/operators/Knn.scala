@@ -3279,8 +3279,8 @@ object Knn {
     * enters its beam walk at a medoid and HNSW at a hierarchy, both
     * to cut hops to the query's neighborhood; the IVF serving
     * quantizer is already trained once per corpus
-    * ([[ivfCentroids]], persisted by the serving stores as
-    * vcents/centroids), so the graph tier seeds from the corpus
+    * ([[ivfCentroids]], persisted by the serving stores beside
+    * their cells), so the graph tier seeds from the corpus
     * vectors NEAREST each centroid (`mPerCell` per cell — the
     * medoid and its runners-up, same score and first-max tie-break
     * as [[assign]]; the default 3 measured strictly dominant:

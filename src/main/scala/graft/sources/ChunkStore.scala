@@ -362,73 +362,40 @@ object ChunkStore {
       path, manifestCols)
   }
 
-  /** Atomic `_latest` pointer swap shared by the commit paths. */
+  /** Atomic `_latest` pointer swap shared by the commit paths — the
+    * shared marker write (overwrite-rename: no delete-then-rename
+    * window where a concurrent reader sees no pointer at all). */
   private def swapPointer(spark: SparkSession, path: String,
-                          next: Long): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = dir.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/_latest.tmp")
-    val ptr = new org.apache.hadoop.fs.Path(s"$path/_latest")
-    val out = fs.create(tmp, true)
-    try out.write(next.toString.getBytes("UTF-8")) finally out.close()
-    // Overwrite-rename: the pointer is REPLACED in one metadata op —
-    // no delete-then-rename window where a concurrent reader sees no
-    // pointer at all.
-    val swapped =
-      try {
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(dir.toUri, conf)
-        fc.rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        true
-      } catch {
-        case _: UnsupportedOperationException | _: java.io.IOException => false
-      }
-    if (!swapped) {
-      // FS without overwrite-rename: delete+rename leaves a brief
-      // pointer gap that currentVersion's retry covers.
-      if (fs.exists(ptr)) fs.delete(ptr, false): Unit
-      require(fs.rename(tmp, ptr),
-        s"commit pointer swap failed for $path v=$next")
-    }
-    require(fs.exists(ptr), s"commit pointer swap failed for $path v=$next")
-  }
+                          next: Long): Unit =
+    Markers.write(spark, s"$path/_latest", next.toString, "commit pointer")
 
   /** The committed version, or None for an empty store. A pointer
     * miss is retried briefly: on FileSystems without overwrite-rename
     * a concurrent commit has a short delete→rename window. */
   def currentVersion(spark: SparkSession, path: String): Option[Long] = {
-    val ptr = new org.apache.hadoop.fs.Path(s"$path/_latest")
-    val fs = ptr.getFileSystem(spark.sessionState.newHadoopConf())
     val store = new org.apache.hadoop.fs.Path(path)
+    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
+    // Only retry when a v=* sibling exists — evidence a commit
+    // happened, so the missing pointer may be a concurrent
+    // delete→rename window. A pointer-less store with no version
+    // dirs (e.g. a crashed first commit, or no store dir at all)
+    // will never grow one by waiting; don't tax every read with the
+    // retry latency.
+    def committedBefore: Boolean =
+      try fs.listStatus(store).exists(_.getPath.getName.startsWith("v="))
+      catch { case _: java.io.FileNotFoundException => false }
+    var res = Markers.read(spark, s"$path/_latest")
     var attempt = 0
-    var res: Option[Long] = None
-    while (res.isEmpty && attempt < 3) {
-      if (fs.exists(ptr)) {
-        val in = fs.open(ptr)
-        try {
-          val buf = new Array[Byte](32)
-          val n = in.read(buf)
-          res = Some(new String(buf, 0, n, "UTF-8").trim.toLong)
-        } finally in.close()
-      } else if (!fs.exists(store)) {
-        attempt = 3 // store dir absent: genuinely empty, don't wait
-      } else {
-        // Only retry when a v=* sibling exists — evidence a commit
-        // happened, so the missing pointer may be a concurrent
-        // delete→rename window. A pointer-less store with no version
-        // dirs (e.g. a crashed first commit) will never grow one by
-        // waiting; don't tax every read with the retry latency.
-        val hasVersionDir =
-          try fs.listStatus(store).exists(_.getPath.getName.startsWith("v="))
-          catch { case _: java.io.FileNotFoundException => false }
-        if (!hasVersionDir) attempt = 3
-        else {
-          attempt += 1
-          if (attempt < 3) Thread.sleep(20L * attempt)
-        }
-      }
+    while (res.isEmpty && attempt < 2 && committedBefore) {
+      attempt += 1
+      Thread.sleep(20L * attempt)
+      res = Markers.read(spark, s"$path/_latest")
     }
-    res
+    res.map { v =>
+      require(v.matches("\\d+"),
+        s"torn or malformed version pointer at $path/_latest: '$v'")
+      v.toLong
+    }
   }
 
   /** Time-travel read: the exact bytes committed as version `n`. */

@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Single-line marker files — the commit pointers and epoch guards
   * every persisted store here hangs its crash safety on (text index
-  * `_commit`, IVF / graph store `_epoch`). One shared discipline so
-  * the stores cannot drift:
+  * `_commit` and its per-commit `_manifest/v=seq`, ChunkStore's
+  * `_latest` version pointer, IVF / graph store `_epoch`). One shared
+  * discipline so the stores cannot drift:
   *
   *  - READ to EOF: a single `read()` may return short on some
   *    FileSystems (and −1 on an empty file), which would hand the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
-  IntegerType, LongType, StringType, StructField, StructType}
+  IntegerType, LongType, MapType, StringType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 
 import graft.operators.{HybridSearch, Knn}
@@ -52,15 +52,19 @@ import graft.operators.{HybridSearch, Knn}
   *    semi-joins for s5-style equality filters (store.go:133-150).
   *  - `vectors/batch=B/cid=K/` (doc_id, v) — the hybrid leg's
   *    hashed-BoW document embeddings under a coarse quantizer frozen
-  *    at build time (`vcents/v=N`), cid-partitioned like the IVF
-  *    store so a probed serve reads only its cells; nprobe ≥ cells
-  *    degenerates to the exact scan the s21 oracle gates.
+  *    at build time (kept in the manifest), cid-partitioned like the
+  *    IVF store so a probed serve reads only its cells; nprobe ≥
+  *    cells degenerates to the exact scan the s21 oracle gates.
   *  - `vocab/v=N` (term, df), `prefixes/v=N` (ranked completions),
   *    `stats/v=N` (exact integer-valued corpus sums),
-  *    `tombstones/v=N` (doc_id, upto_batch), `vcents/v=N` — the
-  *    SMALL artifacts, rewritten as a fresh version per commit
-  *    (vocab cardinality — Heaps' law — so the rewrite stays tiny at
-  *    any corpus size) and resolved through the marker's `seq`.
+  *    `tombstones/v=N` (doc_id, upto_batch) — the SMALL artifacts,
+  *    rewritten as a fresh version per commit (vocab cardinality —
+  *    Heaps' law — so the rewrite stays tiny at any corpus size) and
+  *    resolved through the marker's `seq`.
+  *  - `_manifest/v=N` — one JSON file per commit holding the
+  *    committed `docs/` schema and the frozen quantizer's centroids:
+  *    staged before the marker flips and read on the driver, so
+  *    neither costs a Spark job to open.
   *
   * Reads open an artifact without a Spark job ([[readArtifact]]):
   * each artifact's schema is declared beside its writer, so no footer
@@ -81,7 +85,8 @@ import graft.operators.{HybridSearch, Knn}
   * [[compact]] rewrites the live view into one consolidated batch
   * (physically dropping tombstoned rows and merging per-batch small
   * files — the LSM compaction that bounds both tombstone-list size
-  * and file counts), again behind a single marker flip.
+  * and file counts), again behind a single marker flip: it is
+  * [[applyChange]]'s consolidated commit of an empty change.
   *
   * Every serving method reshapes the loaded artifacts into the SAME
   * base/stats frames the scan path builds and calls the SAME scoring
@@ -381,69 +386,64 @@ object TextIndex {
     Seq.empty[(Long, Long)].toDF("doc_id", "upto_batch")
   }
 
-  private val VcentsSchema = fieldsOf("cid" -> IntegerType,
-    "cv" -> ArrayType(DoubleType))
-
-  private def writeCents(spark: SparkSession, path: String, seq: Long,
-                         cents: Seq[Seq[Double]]): Unit = {
-    import spark.implicits._
-    cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cid", "cv")
-      .write.mode("overwrite").parquet(s"$path/vcents/v=$seq")
-  }
-
-  /** The frozen quantizer at commit `c`, in cid order — ≤
-    * [[VectorCells]] rows collected and sorted on the driver (an
-    * `orderBy` would add a range-partitioning sample job per read). */
-  private def readCents(spark: SparkSession, path: String,
-                        c: Commit): Seq[Seq[Double]] = {
-    import spark.implicits._
-    readArtifact(spark, path, "vcents", c)
-      .select($"cid", $"cv").as[(Int, Seq[Double])].collect()
-      .sortBy(_._1).map(_._2).toSeq
-  }
-
-  /** The committed `docs/` schema, persisted as a versioned ZERO-ROW
-    * parquet (`dschema/v=seq` — the footer is the schema; nothing
-    * else is stored). This is what makes METADATA SCHEMA EVOLUTION
-    * (vector/schema.go EnsureSchema's AddProperty: new properties
-    * appear, old objects read nil) serveable without per-query
-    * footer merging: every docs read applies this schema explicitly,
-    * so batches written before a column existed fill it with NULL at
-    * scan time — no mergeSchema cost, no backfill rewrite. */
-  private def writeDocsSchema(spark: SparkSession, path: String,
-                              seq: Long,
-                              schema: org.apache.spark.sql.types.StructType)
-      : Unit =
-    spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .write.mode("overwrite").parquet(s"$path/dschema/v=$seq")
-
   /** [[docsOf]]'s schema plus the two partition columns the batch
     * writer adds — the shape a docs read resolves. */
-  private def withPartCols(s: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+  private def withPartCols(s: StructType): StructType =
     StructType(s.fields ++
       Seq(StructField("dbucket", LongType), StructField("batch", LongType))
         .filterNot(f => s.fieldNames.contains(f.name)))
+
+  // ----------------------------------------------------- manifest --
+
+  /** What one commit records beside the marker: the committed `docs/`
+    * schema and the frozen quantizer in cid order (empty for a
+    * keyword-only index). */
+  private[graft] final case class Manifest(docsSchema: StructType,
+                                           cents: Seq[Seq[Double]])
+
+  /** `t` with every level nullable — the shape a parquet read of it
+    * resolves, so the committed schema compares against an incoming
+    * batch exactly as the files it describes do. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), true)
+    case m: MapType =>
+      MapType(nullable(m.keyType), nullable(m.valueType), true)
+    case o => o
   }
 
-  /** The committed docs schema — falls back to the raw footer for an
-    * index written before the artifact existed, NORMALIZING the
-    * partition columns to the long types [[withPartCols]] declares
-    * (partition discovery infers them as int, which would trip the
-    * evolution type check on every append to a pre-artifact index). */
-  private def docsSchemaOf(spark: SparkSession, path: String,
-                           c: Commit): org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types.{LongType, StructType}
-    val (fs, _) = hadoop(spark, path)
-    val d = new org.apache.hadoop.fs.Path(s"$path/dschema/v=${c.seq}")
-    if (fs.exists(d)) spark.read.parquet(s"$path/dschema/v=${c.seq}").schema
-    else StructType(spark.read.parquet(s"$path/docs").schema.fields.map(f =>
-      if (f.name == "batch" || f.name == "dbucket")
-        f.copy(dataType = LongType)
-      else f))
+  /** Stage commit `seq`'s manifest (`_manifest/v=seq`, one JSON line)
+    * — before the marker flips, so a reader that resolves `seq` always
+    * finds it. Doubles print in their shortest round-trip form, so the
+    * centroids read back bit-identical. */
+  private[graft] def writeManifest(spark: SparkSession, path: String,
+                                   seq: Long, m: Manifest): Unit = {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    Markers.write(spark, s"$path/_manifest/v=$seq",
+      JsonMethods.compact(JObject(
+        "docs_schema" -> JsonMethods.parse(nullable(m.docsSchema).json),
+        "cents" -> JArray(m.cents.map(c => JArray(c.map(JDouble(_)).toList))
+          .toList))), "text-index manifest")
+  }
+
+  /** Commit `c`'s manifest — a driver-side file read, no Spark job. An
+    * index committed before manifests existed has none and must be
+    * rebuilt. */
+  private[graft] def manifestOf(spark: SparkSession, path: String,
+                                c: Commit): Manifest = {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val json = JsonMethods.parse(
+      Markers.read(spark, s"$path/_manifest/v=${c.seq}").getOrElse(
+        throw new IllegalStateException(s"text index at $path has no " +
+          s"manifest for commit ${c.seq} — it predates the per-commit " +
+          "manifest; rebuild the index")))
+    Manifest(
+      DataType.fromJson(JsonMethods.compact(json \ "docs_schema"))
+        .asInstanceOf[StructType],
+      (json \ "cents").children.map(_.children.map(_.asInstanceOf[JDouble].num)))
   }
 
   // -------------------------------------------------------- build --
@@ -494,6 +494,8 @@ object TextIndex {
     import spark.implicits._
     validateCorpus(corpus)
     val toks = tokenize(corpus).persist()
+    // the quantizer the vector task trains (none: keyword-only)
+    var cents = Seq.empty[Seq[Double]]
     try {
       val rows = termRowsOf(toks).persist()
       try {
@@ -516,16 +518,13 @@ object TextIndex {
             if (withVectors) {
               val vectors = vectorsOf(toks).persist()
               try {
-                val cents = Knn.kmeansFit(
+                cents = Knn.kmeansFit(
                   vectors.select($"doc_id".as("vec_id"),
                     graft.functions.VectorFunctions.asDouble($"v").as("v")),
                   k = VectorCells, iters = 3)
-                writeCents(spark, path, 1L, cents)
                 writeVectorBatch(spark, path, 0L, vectors, cents,
                   dynamic = false)
               } finally vectors.unpersist(): Unit
-            } else {
-              writeCents(spark, path, 1L, Seq.empty[Seq[Double]])
             },
           // vocab derives from postings: (term, doc) rows are unique,
           // so df is a plain count per term
@@ -547,10 +546,10 @@ object TextIndex {
           // reproduce the scan path's doubles bit-for-bit
           () => writeVersioned(batchStatsOf(toks), path, "stats", 1L),
           () => writeVersioned(emptyTombstones(spark), path,
-            "tombstones", 1L),
-          () => writeDocsSchema(spark, path, 1L,
-            withPartCols(docsOf(toks).schema))))
+            "tombstones", 1L)))
       } finally rows.unpersist()
+      writeManifest(spark, path, 1L,
+        Manifest(withPartCols(docsOf(toks).schema), cents))
       writeMarker(spark, path, Commit(1L, 0L, 0L, epochId))
     } finally toks.unpersist()
   }
@@ -594,17 +593,31 @@ object TextIndex {
     * carries those through unchanged); the epoch pays ONE write wave
     * and ONE marker flip, and the maintenance write amplification
     * halves. Same replay idempotence: the decision and the staging
-    * targets derive only from the committed marker + the batch. */
+    * targets derive only from the committed marker + the batch.
+    *
+    * An EMPTY change (no deletes, no documents) is [[compact]]: with
+    * `compactNow` it consolidates the live view as above and carries
+    * vocab and prefixes forward unchanged. Every commit stages its
+    * manifest (the possibly widened docs schema, the frozen quantizer)
+    * last, just before the flip. */
   private[graft] def applyChange(path: String, delIds: Option[DataFrame],
                                  newDocs: Option[DataFrame],
                                  minPrefix: Int, maxPrefix: Int,
                                  kComplete: Int, epochId: Long,
                                  flip: Boolean,
-                                 compactNow: Boolean = false): Unit = {
+                                 compactNow: Boolean = false): Unit =
+    applyChange(delIds.orElse(newDocs).map(_.sparkSession).getOrElse(
+        throw new IllegalArgumentException(
+          "applyChange needs deletes and/or new documents")),
+      path, delIds, newDocs, minPrefix, maxPrefix, kComplete, epochId, flip,
+      compactNow)
+
+  private def applyChange(spark: SparkSession, path: String,
+                          delIds: Option[DataFrame],
+                          newDocs: Option[DataFrame], minPrefix: Int,
+                          maxPrefix: Int, kComplete: Int, epochId: Long,
+                          flip: Boolean, compactNow: Boolean): Unit = {
     newDocs.foreach(validateCorpus)
-    val spark = delIds.orElse(newDocs).map(_.sparkSession)
-      .getOrElse(throw new IllegalArgumentException(
-        "applyChange needs deletes and/or new documents"))
     import spark.implicits._
     val c = commitOf(spark, path)
     val seq2 = c.seq + 1
@@ -639,11 +652,9 @@ object TextIndex {
     // known columns — its rows read them as NULL the same way. A
     // column re-arriving under a DIFFERENT type is the one illegal
     // shape (Weaviate rejects property type changes too).
-    var docsSchema2 = docsSchemaOf(spark, path, c)
-    // the frozen quantizer — read ONCE (a small parquet collect) and
-    // shared by the vector-batch assign and the carry-forward, which
-    // each paid their own read before
-    val cents = readCents(spark, path, c)
+    val manifest = manifestOf(spark, path, c)
+    var docsSchema2 = manifest.docsSchema
+    val cents = manifest.cents
     // the post-change tombstone view (lazy, tiny): what the
     // tombstones task writes on a plain change, and what the
     // consolidated reads apply when compacting in-commit
@@ -793,7 +804,13 @@ object TextIndex {
         // differently; everything else merges through untouched, so
         // the append cost is batch-vocabulary-sized, not
         // corpus-vocabulary-sized.
-        () => {
+        () => if (addPost.isEmpty && deadFwd.isEmpty) {
+          // an empty change moves no df: both carry forward
+          writeVersioned(readArtifact(spark, path, "vocab", c), path,
+            "vocab", seq2)
+          writeVersioned(readArtifact(spark, path, "prefixes", c), path,
+            "prefixes", seq2)
+        } else {
           val oldVocab = readArtifact(spark, path, "vocab", c)
           val inc = addPost.map(_.groupBy($"term")
             .agg(count(lit(1)).as("df")))
@@ -864,13 +881,11 @@ object TextIndex {
         // its tombstone list resets (compact's contract).
         () => writeVersioned(
           if (compactNow) emptyTombstones(spark) else tomb2,
-          path, "tombstones", seq2),
+          path, "tombstones", seq2)))
 
-        // quantizer carries forward frozen; the docs schema carries
-        // forward possibly WIDENED (the AddProperty merge above)
-        () => writeCents(spark, path, seq2, cents),
-        () => writeDocsSchema(spark, path, seq2, docsSchema2)))
-
+      // the quantizer carries forward frozen; the docs schema carries
+      // forward possibly WIDENED (the AddProperty merge above)
+      writeManifest(spark, path, seq2, Manifest(docsSchema2, cents))
       if (flip)
         writeMarker(spark, path,
           if (compactNow)
@@ -941,14 +956,6 @@ object TextIndex {
     n
   }
 
-  /** UPSERT — delete + append in ONE commit: the consumer of c18's
-    * change detection (result_consumer.go:196-198 re-processes
-    * `changed` pages), closing the CDC loop a pure append index
-    * can't. Existing copies of the batch's doc_ids are tombstoned
-    * (ids absent from the index tombstone vacuously) and the new
-    * text lands as a fresh batch; vocab/stats/prefixes carry the
-    * exact net change. s22 gates serve-after-upsert against the
-    * scan query's own oracle. */
   /** SYNC — a CDC consumer's WHOLE epoch in one commit
     * (result_consumer.go:196-198: re-process changed/new pages, drop
     * deleted ones): the upsert batch's ids AND the delete ids
@@ -966,6 +973,14 @@ object TextIndex {
       Some(docs), minPrefix, maxPrefix, kComplete, epochId, flip = true)
   }
 
+  /** UPSERT — delete + append in ONE commit: the consumer of c18's
+    * change detection (result_consumer.go:196-198 re-processes
+    * `changed` pages), closing the CDC loop a pure append index
+    * can't. Existing copies of the batch's doc_ids are tombstoned
+    * (ids absent from the index tombstone vacuously) and the new
+    * text lands as a fresh batch; vocab/stats/prefixes carry the
+    * exact net change. s22 gates serve-after-upsert against the
+    * scan query's own oracle. */
   def upsert(docs: DataFrame, path: String, minPrefix: Int = 2,
              maxPrefix: Int = 4, kComplete: Int = 3,
              epochId: Long = -1L): Unit = {
@@ -982,18 +997,13 @@ object TextIndex {
     * epoch's entry: one write wave and one marker flip instead of
     * apply + a full compact that re-reads every artifact the apply
     * just wrote. Serving is bit-equal either way ([[compact]]'s
-    * contract); returns whether the commit consolidated. */
-  private[graft] def applyChangeAuto(path: String,
-                                     delIds: Option[DataFrame],
-                                     newDocs: Option[DataFrame],
-                                     epochId: Long,
-                                     maxTombstones: Long,
-                                     maxBatches: Long,
-                                     minPrefix: Int = 2, maxPrefix: Int = 4,
-                                     kComplete: Int = 3): Boolean = {
-    val spark = delIds.orElse(newDocs).map(_.sparkSession)
-      .getOrElse(throw new IllegalArgumentException(
-        "applyChangeAuto needs deletes and/or new documents"))
+    * contract); returns whether the commit consolidated. An empty
+    * change ([[maybeCompact]]) commits only when the gate is due. */
+  private def applyChangeAuto(spark: SparkSession, path: String,
+                              delIds: Option[DataFrame],
+                              newDocs: Option[DataFrame], epochId: Long,
+                              maxTombstones: Long,
+                              maxBatches: Long): Boolean = {
     import spark.implicits._
     val c = commitOf(spark, path)
     val batchesAfter =
@@ -1005,8 +1015,9 @@ object TextIndex {
           oldIds.unionByName(i.select($"doc_id")).distinct())
         .count() > maxTombstones
     }
-    applyChange(path, delIds, newDocs, minPrefix, maxPrefix, kComplete,
-      epochId, flip = true, compactNow = due)
+    if (due || delIds.isDefined || newDocs.isDefined)
+      applyChange(spark, path, delIds, newDocs, minPrefix = 2, maxPrefix = 4,
+        kComplete = 3, epochId, flip = true, compactNow = due)
     due
   }
 
@@ -1015,8 +1026,8 @@ object TextIndex {
   def appendAuto(newDocs: DataFrame, path: String, epochId: Long,
                  maxTombstones: Long = 10000L,
                  maxBatches: Long = 16L): Boolean =
-    applyChangeAuto(path, None, Some(newDocs), epochId, maxTombstones,
-      maxBatches)
+    applyChangeAuto(newDocs.sparkSession, path, None, Some(newDocs),
+      epochId, maxTombstones, maxBatches)
 
   /** [[upsert]] with the auto-compaction decision fused into the same
     * commit — the update stream's epoch. */
@@ -1024,8 +1035,8 @@ object TextIndex {
                  maxTombstones: Long = 10000L,
                  maxBatches: Long = 16L): Boolean = {
     import docs.sparkSession.implicits._
-    applyChangeAuto(path, Some(docs.select($"doc_id")), Some(docs),
-      epochId, maxTombstones, maxBatches)
+    applyChangeAuto(docs.sparkSession, path, Some(docs.select($"doc_id")),
+      Some(docs), epochId, maxTombstones, maxBatches)
   }
 
   /** [[sync]] with the auto-compaction decision fused into the same
@@ -1034,7 +1045,7 @@ object TextIndex {
                epochId: Long, maxTombstones: Long = 10000L,
                maxBatches: Long = 16L): Boolean = {
     import docs.sparkSession.implicits._
-    applyChangeAuto(path,
+    applyChangeAuto(docs.sparkSession, path,
       Some(docs.select($"doc_id").unionByName(delIds.select($"doc_id"))),
       Some(docs), epochId, maxTombstones, maxBatches)
   }
@@ -1052,15 +1063,14 @@ object TextIndex {
     "fielded" -> FieldedSchema, "forward" -> ForwardSchema,
     "content" -> ContentSchema, "vectors" -> VectorsSchema,
     "vocab" -> VocabSchema, "prefixes" -> PrefixesSchema,
-    "stats" -> StatsSchema, "tombstones" -> TombstonesSchema,
-    "vcents" -> VcentsSchema)
+    "stats" -> StatsSchema, "tombstones" -> TombstonesSchema)
 
   /** The ONE way an artifact opens at commit `c` — lazily, and with
     * no Spark job:
     *  - the schema is declared ([[DeclaredSchemas]]), so no
     *    footer-inference job runs; `docs` applies its committed
-    *    schema, so batches written before a metadata column evolved
-    *    into the index read it as NULL;
+    *    schema from the manifest, so batches written before a
+    *    metadata column evolved into the index read it as NULL;
     *  - a versioned artifact reads `name/v=seq`;
     *  - a batch-partitioned artifact names only the live
     *    `name/batch=B` directories, B in [minBatch, maxBatch], so
@@ -1083,7 +1093,8 @@ object TextIndex {
     import org.apache.hadoop.fs.Path
     val root = s"$path/$name"
     val schema =
-      if (name == "docs") docsSchemaOf(spark, path, c) else DeclaredSchemas(name)
+      if (name == "docs") manifestOf(spark, path, c).docsSchema
+      else DeclaredSchemas(name)
     val bucketCol = BucketColOf.get(name)
     val (base, dirs) = bucketCol match {
       case None => (s"$root/v=${c.seq}", Seq(s"$root/v=${c.seq}"))
@@ -1389,7 +1400,7 @@ object TextIndex {
                                  candidates: Int, nprobe: Int): DataFrame = {
     import spark.implicits._
     graft.plans.GraftFunctions.ensureRegistered(spark)
-    val cents = readCents(spark, path, c)
+    val cents = manifestOf(spark, path, c).cents
     val queryTok = array(queryTerms.map(lit): _*)
     val qvec = spark.range(1)
       .select(queryTok.as("tok"))
@@ -1495,7 +1506,7 @@ object TextIndex {
     val qvec = spark.range(1)
       .select(queryTok.as("tok"))
       .select(expr("poly_bow(tok, 64)").as("qv"))
-    val cents = readCents(spark, path, c)
+    val cents = manifestOf(spark, path, c).cents
     val vec =
       if (cents.isEmpty)
         // keyword-only index: empty leg (fusion treats it as absent —
@@ -1899,7 +1910,7 @@ object TextIndex {
       .toDF("qid", "terms")
       .select($"qid", expr("poly_bow(terms, 64)").as("qv"))
     val wV = Window.partitionBy($"qid").orderBy($"v_score".desc, $"doc_id")
-    val cents = readCents(spark, path, c)
+    val cents = manifestOf(spark, path, c).cents
     val vec =
       if (cents.isEmpty)
         // keyword-only index: every query's vector leg is empty
@@ -2014,52 +2025,14 @@ object TextIndex {
     * bucket directory — the repartition-by-partition-column write),
     * physically dropping tombstoned rows and per-batch file
     * fragmentation in one pass, reset the tombstone list, and flip
-    * the marker. Readers either resolve the old commit (old batches,
+    * the marker — [[applyChange]]'s consolidated commit of an empty
+    * change. Readers either resolve the old commit (old batches,
     * old tombstones — intact) or the new one; serving is bit-equal
     * across the swap (the spec pins it). Old batch directories and
     * artifact versions become garbage; [[vacuum]] reclaims them. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
-    val c = commitOf(spark, path)
-    val seq2 = c.seq + 1
-    val nb = c.maxBatch + 1
-    val tomb = tombstonesOf(spark, path, c)
-    def rewrite(name: String, bucketCol: String): Unit = {
-      val (fs, _) = hadoop(spark, path)
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/$name"))) {
-        liveRows(readArtifact(spark, path, name, c), tomb)
-          .withColumn("batch", lit(nb))
-          .repartition(col(bucketCol))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch", bucketCol)
-          .parquet(s"$path/$name")
-      }
-    }
-    // every rewrite reads its own artifact and writes its own
-    // directory; the small-artifact carry-forwards are tiny
-    // independent copies — all of it submits concurrently (the
-    // "overlap independent jobs" rule) and the marker flips only
-    // after every job returned. Tombstones reset — every
-    // logically-deleted row is now physically gone.
-    graft.Par.run(Seq(
-      () => rewrite("postings", "pbucket"),
-      () => rewrite("fielded", "pbucket"),
-      () => rewrite("forward", "dbucket"),
-      () => rewrite("docs", "dbucket"),
-      () => rewrite("content", "dbucket"),
-      () => rewrite("vectors", "cid"),
-      () => writeVersioned(readArtifact(spark, path, "vocab", c),
-        path, "vocab", seq2),
-      () => writeVersioned(readArtifact(spark, path, "prefixes", c),
-        path, "prefixes", seq2),
-      () => writeVersioned(readArtifact(spark, path, "stats", c),
-        path, "stats", seq2),
-      () => writeVersioned(emptyTombstones(spark), path, "tombstones", seq2),
-      () => writeCents(spark, path, seq2, readCents(spark, path, c)),
-      () => writeDocsSchema(spark, path, seq2, docsSchemaOf(spark, path, c))))
-    writeMarker(spark, path, Commit(seq2, nb, nb, c.lastEpoch))
-  }
+  def compact(spark: SparkSession, path: String): Unit =
+    applyChange(spark, path, None, None, minPrefix = 2, maxPrefix = 4,
+      kComplete = 3, epochId = -1L, flip = true, compactNow = true)
 
   /** COUNT-GATED auto-compaction — the OPTIMIZE trigger a deployment
     * actually schedules (the Pipeline.connectedComponentsAdaptive
@@ -2070,17 +2043,13 @@ object TextIndex {
     * compaction IS the small-file curve). Compacts when either
     * exceeds its bound; returns whether a rewrite ran. Serving is
     * bit-equal either way ([[compact]]'s contract), so callers can
-    * drop this after any commit. */
+    * drop this after any commit. The gate is [[applyChangeAuto]]'s,
+    * evaluated on an empty change. */
   def maybeCompact(spark: SparkSession, path: String,
                    maxTombstones: Long = 10000L,
-                   maxBatches: Long = 16L): Boolean = {
-    val c = commitOf(spark, path)
-    val nBatches = c.maxBatch - c.minBatch + 1
-    val due = nBatches > maxBatches ||
-      tombstonesOf(spark, path, c).count() > maxTombstones
-    if (due) compact(spark, path)
-    due
-  }
+                   maxBatches: Long = 16L): Boolean =
+    applyChangeAuto(spark, path, None, None, epochId = -1L, maxTombstones,
+      maxBatches)
 
   /** Retention: physically remove batch directories outside the
     * committed [minBatch, maxBatch] range and artifact versions
@@ -2094,19 +2063,18 @@ object TextIndex {
       val d = new org.apache.hadoop.fs.Path(s"$path/$sub")
       if (fs.exists(d)) fs.listStatus(d).foreach { s =>
         val n = s.getPath.getName
-        if (s.isDirectory && n.startsWith(prefix)) {
-          val v = n.stripPrefix(prefix).toLong
-          if (!keep(v)) {
+        // a marker write's leftover `v=N.tmp` names no version
+        if (n.startsWith(prefix))
+          n.stripPrefix(prefix).toLongOption.filterNot(keep).foreach { _ =>
             fs.delete(s.getPath, true): Unit
             dropped += s"$sub/$n"
           }
-        }
       }
     }
     Seq("postings", "fielded", "forward", "docs", "content", "vectors")
       .foreach(a =>
         clean(a, "batch=", b => b >= c.minBatch && b <= c.maxBatch))
-    Seq("vocab", "prefixes", "stats", "tombstones", "vcents", "dschema")
+    Seq("vocab", "prefixes", "stats", "tombstones", "_manifest")
       .foreach(a => clean(a, "v=", v => v == c.seq))
     dropped.toSeq
   }

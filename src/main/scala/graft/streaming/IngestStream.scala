@@ -300,13 +300,14 @@ object IngestStream {
     * the marker read, not a directory probe — a crashed half-build
     * must read as absent.
     *
-    * After every committed epoch the count-gated auto-compaction
-    * check runs (TextIndex.maybeCompact — marker-read signals only):
-    * streaming appends are exactly the one-file-per-batch-per-bucket
-    * small-file curve, so the stream is where the OPTIMIZE trigger
-    * belongs; `maxBatches` bounds batches-since-compaction (the
-    * StreamingSpec pins that a mid-stream compaction changes no
-    * served byte). */
+    * Every epoch's append carries the count-gated auto-compaction
+    * decision inside its own commit (TextIndex.appendAuto — marker-
+    * read signals only; a due compaction consolidates in the same
+    * write wave and marker flip): streaming appends are exactly the
+    * one-file-per-batch-per-bucket small-file curve, so the stream is
+    * where the OPTIMIZE trigger belongs; `maxBatches` bounds
+    * batches-since-compaction (the StreamingSpec pins that a
+    * mid-stream compaction changes no served byte). */
   def indexStream(docs: DataFrame, indexPath: String,
                   maxBatches: Long = 16L): StreamingQuery = {
     val appendEpoch: (DataFrame, Long) => Unit = (batch, epochId) => {
@@ -376,8 +377,10 @@ object IngestStream {
     * at-least-once replay guard covers the whole epoch — no crash
     * window where half the epoch is visible. The stored-hash lookup
     * is an id-semi-joined content read (batch-bounded, dbucket-
-    * prunable), never a corpus scan. Count-gated auto-compaction
-    * runs after every committed epoch, like [[indexStream]]'s. */
+    * prunable), never a corpus scan. The count-gated compaction
+    * decision rides inside the epoch's commit (TextIndex.syncAuto),
+    * like [[indexStream]]'s; an epoch that changes nothing runs the
+    * gate alone (TextIndex.maybeCompact). */
   def syncIndexStream(docs: DataFrame, indexPath: String,
                       maxBatches: Long = 16L): StreamingQuery = {
     val syncEpoch: (DataFrame, Long) => Unit = (batch, epochId) => {
@@ -723,6 +726,10 @@ object IngestStream {
         Knn.deleteFromNnVecStore(spark, vecPath, dels)
       }
     }
+    // every tier landed: the staged batch is spent
+    val stage = new org.apache.hadoop.fs.Path(s"$path/_stage")
+    stage.getFileSystem(spark.sessionState.newHadoopConf())
+      .delete(stage, true): Unit
   }
 
   /** STREAMING maintenance of the persisted GRAPH+PQ serving tier —

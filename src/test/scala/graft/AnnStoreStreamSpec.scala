@@ -161,6 +161,39 @@ class AnnStoreStreamSpec extends SparkSpec {
     Caches.releaseAll()
   }
 
+  test("graph streams: no staged batch stays on disk once an epoch commits") {
+    val sparkSession = spark
+    import sparkSession.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val vecs = vectors(0L to 30L)
+    val base = tmp("graft-graph-stage")
+    Knn.writeGraphPqQuantizer(spark, sfDir, s"$base/gpq")
+    type Epochs = Seq[Seq[(Long, Option[Seq[Double]])]]
+    val chainEpochs: Epochs =
+      Seq(chain(0 to 7), chain(Seq(8, 9)) :+ (5L -> None))
+    val vecEpochs: Epochs = Seq((0L until 30L).map(i => i -> Some(vecs(i))),
+      Seq(3L -> Some(vecs(3L).map(_ + 1.0)), 5L -> None,
+        30L -> Some(vecs(30L))))
+    val streams = Seq[(String, Epochs, DataFrame => StreamingQuery)](
+      ("graph", chainEpochs, IngestStream.nnGraphStream(_, s"$base/graph", k = 2)),
+      ("vamana", chainEpochs,
+        IngestStream.vamanaStream(_, s"$base/vamana", degreeCap = 3)),
+      ("gpq", vecEpochs, IngestStream.graphPqStream(_, s"$base/gpq", k = 3)))
+    for ((name, epochs, start) <- streams) {
+      val stream = MemoryStream[(Long, Option[Seq[Double]])]
+      val query = start(stream.toDF().toDF("vec_id", "v"))
+      try epochs.foreach { e =>
+        stream.addData(e: _*)
+        query.processAllAvailable()
+      } finally query.stop()
+      assert(Knn.storeLastEpoch(spark, s"$base/$name") === 1L)
+      assert(!new java.io.File(s"$base/$name/_stage").exists(),
+        s"$name: the staged batch outlived its epoch: " +
+          listing(s"$base/$name").map(_._1).filter(_.startsWith("_stage")))
+    }
+    Caches.releaseAll()
+  }
+
   test("PQ stream: a first build torn after its vectors tier landed rebuilds instead of wedging") {
     val sparkSession = spark
     import sparkSession.implicits._

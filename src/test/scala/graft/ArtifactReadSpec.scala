@@ -79,7 +79,7 @@ class ArtifactReadSpec extends SparkSpec with JobCounting {
       (i, t, if (i % 2 == 0) "web" else "docs") }
       .toDF("doc_id", "text", "source"), p)
     val batched = Seq("postings", "fielded", "forward", "content", "vectors")
-    val versioned = Seq("vocab", "prefixes", "stats", "tombstones", "vcents")
+    val versioned = Seq("vocab", "prefixes", "stats", "tombstones")
     def inferred(name: String, c: TextIndex.Commit) =
       if (batched.contains(name)) spark.read.parquet(s"$p/$name").schema
       else spark.read.parquet(s"$p/$name/v=${c.seq}").schema

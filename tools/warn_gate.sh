@@ -36,6 +36,20 @@ N=$(grep -c "No Partition Defined" "$LOG" || true)
 echo "No-Partition-Defined warnings: $N (pin $PIN)"
 if [ "$N" -gt "$PIN" ]; then
   echo "FAIL: warning count grew past the pin — audit the new window"
+  # Attribute the count: ScalaTest prints "[info] - <test>" when a test
+  # ends, so the warnings logged since the previous such line belong
+  # to it (suites run one at a time; "[info] <Suite>:" names the suite).
+  echo "per-test counts (nonzero, largest first):"
+  awk '
+    /^\[info\] [A-Za-z0-9_.]+:$/ { suite = $2; sub(/:$/, "", suite) }
+    /No Partition Defined/ { n++ }
+    /^\[info\] - / {
+      if (n > 0) { t = $0; sub(/^\[info\] - /, "", t)
+                   printf "%6d  %s: %s\n", n, suite, t }
+      n = 0
+    }
+    END { if (n > 0) printf "%6d  (after the last test)\n", n }
+  ' "$LOG" | sort -rn
   exit 1
 fi
 echo "OK"
