@@ -200,7 +200,11 @@ final class GraftEngine(spark: SparkSession, corpus: DataFrame,
     * persisted BM25 leg with the persisted vector leg under the scan
     * path's own fusion expression (`fusion` = "relative" | "ranked",
     * s21/s24); a keyword-only index degrades to the BM25 leg. All
-    * reads are bucket/cell-pruned; no corpus scan. */
+    * reads are bucket/cell-pruned; no corpus scan. A hybrid ranking
+    * (alpha > 0, filtered or not) runs its legs when this is called,
+    * in one action fused on the driver, and returns its ≤`limit`
+    * rows as a frame that collects with no job; the alpha = 0 BM25
+    * top-k stays a lazy plan. */
   def searchFromIndex(path: String, query: String,
                       alpha: Double = settings.searchAlpha,
                       limit: Int = settings.searchTopK,

@@ -1,6 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, classic}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.plans.logical.CommandResult
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -183,22 +187,41 @@ object HybridSearch {
   private[graft] def fuseRelative(kw: DataFrame, vec: DataFrame,
                                   alpha: Double, limit: Int): DataFrame = {
     import kw.sparkSession.implicits._
-    def normalized(score: Column, lo: Column, hi: Column): Column =
-      when(score.isNull, 0.0)
-        .when(hi === lo, 0.5)
-        .otherwise((score - lo) / (hi - lo))
     val cand = kw.join(vec, Seq("doc_id"), "full_outer")
     val bounds = cand.agg(
       min($"kw_score").as("kmin"), max($"kw_score").as("kmax"),
       min($"v_score").as("vmin"), max($"v_score").as("vmax"))
     cand.crossJoin(broadcast(bounds))
-      .select($"doc_id",
-        round(
-          lit(alpha) * normalized($"v_score", $"vmin", $"vmax") +
-          lit(1 - alpha) * normalized($"kw_score", $"kmin", $"kmax"), 6).as("hybrid_score"))
+      .select($"doc_id", relativeScore(alpha).as("hybrid_score"))
       .orderBy($"hybrid_score".desc, $"doc_id")
       .limit(limit)
   }
+
+  /** relativeScoreFusion's score of one candidate row carrying its
+    * leg scores (`kw_score`, `v_score`, null where a leg missed the
+    * doc) and the four leg bounds (`kmin` … `vmax`) — the ONE
+    * expression [[fuseRelative]] and the store's driver-side fusion
+    * ([[fuseCollected]]) both evaluate. */
+  private[graft] def relativeScore(alpha: Double): Column = {
+    def normalized(score: Column, lo: Column, hi: Column): Column =
+      when(score.isNull, 0.0)
+        .when(hi === lo, 0.5)
+        .otherwise((score - lo) / (hi - lo))
+    round(
+      lit(alpha) * normalized(col("v_score"), col("vmin"), col("vmax")) +
+      lit(1 - alpha) * normalized(col("kw_score"), col("kmin"), col("kmax")),
+      6)
+  }
+
+  /** rankedFusion's score of one candidate row carrying its leg ranks
+    * (`kw_rank`, `v_rank`, null where a leg missed the doc) — shared
+    * by [[fuseRanked]] and [[fuseCollected]] like [[relativeScore]]. */
+  private[graft] def rankedScore(alpha: Double): Column =
+    round(
+      when(col("v_rank").isNull, 0.0)
+        .otherwise(lit(alpha) / (lit(60.0) + col("v_rank"))) +
+      when(col("kw_rank").isNull, 0.0)
+        .otherwise(lit(1 - alpha) / (lit(60.0) + col("kw_rank"))), 6)
 
   /** rankedFusion (reciprocal-rank fusion) over the same prepared
     * candidate legs — [[fuseRelative]]'s integer-exact twin, shared
@@ -218,15 +241,108 @@ object HybridSearch {
           .cast("long"))
       .select($"doc_id", $"v_rank")
     kwR.join(vecR, Seq("doc_id"), "full_outer")
-      .select($"doc_id",
-        round(
-          when($"v_rank".isNull, 0.0)
-            .otherwise(lit(alpha) / (lit(60.0) + $"v_rank")) +
-          when($"kw_rank".isNull, 0.0)
-            .otherwise(lit(1 - alpha) / (lit(60.0) + $"kw_rank")), 6).as("rrf_score"))
+      .select($"doc_id", rankedScore(alpha).as("rrf_score"))
       .orderBy($"rrf_score".desc, $"doc_id")
       .limit(limit)
   }
+
+  /** The store-served twin of [[fuseRelative]] / [[fuseRanked]]
+    * (`fusion` = "relative" | "ranked") over the same two prepared
+    * legs, each already limited to its candidates: the legs union
+    * into ONE action, so each leg runs once and both share one plan
+    * (and its tombstone broadcast). The ≤2×candidates collected rows
+    * then merge by doc_id on the driver (the full outer join's rows),
+    * the leg bounds or ranks are taken there with Spark's double
+    * ordering (NaN greatest, −0.0 = 0.0, the order `min`/`max` and
+    * `orderBy` use), and the SHARED score expression runs as a
+    * projection over a local relation, which Spark folds on the
+    * driver with no job. Rows come back ordered (score desc, doc_id)
+    * and limited, as (doc_id, hybrid_score) or (doc_id, rrf_score).
+    * The returned frame holds those rows — collecting it runs no job
+    * — and keeps the executed leg plan (Spark's CommandResult, the
+    * node an eagerly run command returns), so `explain` still shows
+    * the pruned reads that produced them. */
+  private[graft] def fuseCollected(kw: DataFrame, vec: DataFrame,
+                                   alpha: Double, limit: Int,
+                                   fusion: String): DataFrame = {
+    val spark = kw.sparkSession
+    import spark.implicits._
+    require(fusion == "relative" || fusion == "ranked",
+      s"fusion must be 'relative' or 'ranked', got '$fusion'")
+    val legs = kw.select(lit(0).as("leg"), $"doc_id", $"kw_score".as("s"))
+      .unionAll(vec.select(lit(1).as("leg"), $"doc_id", $"v_score".as("s")))
+    val got = legs.collect()
+    def leg(i: Int): Seq[(Long, Double)] =
+      got.toSeq.filter(_.getInt(0) == i).map(r => (r.getLong(1), r.getDouble(2)))
+    val (kwRows, vecRows) = (leg(0), leg(1))
+    val (out, score) = if (fusion == "relative") {
+      val cand = fullOuter(kwRows, vecRows)
+      val (kmin, kmax) = sqlBounds(cand.flatMap(_._2))
+      val (vmin, vmax) = sqlBounds(cand.flatMap(_._3))
+      val rows = cand.map { case (id, k, v) =>
+        Row(id, k.map(Double.box).orNull, v.map(Double.box).orNull,
+          kmin.orNull, kmax.orNull, vmin.orNull, vmax.orNull)
+      }
+      (local(spark, rows, "doc_id bigint, kw_score double, v_score double, " +
+          "kmin double, kmax double, vmin double, vmax double")
+        .select($"doc_id", relativeScore(alpha).as("hybrid_score")),
+        "hybrid_score")
+    } else {
+      // each leg ranks its own candidates by (score desc, doc_id)
+      def ranks(l: Seq[(Long, Double)]): Seq[(Long, java.lang.Long)] =
+        l.sortWith(byScoreDesc).zipWithIndex
+          .map { case ((id, _), i) => (id, Long.box(i + 1L)) }
+      val rows = fullOuter(ranks(kwRows), ranks(vecRows)).map {
+        case (id, k, v) => Row(id, k.orNull, v.orNull)
+      }
+      (local(spark, rows, "doc_id bigint, kw_rank bigint, v_rank bigint")
+        .select($"doc_id", rankedScore(alpha).as("rrf_score")), "rrf_score")
+    }
+    val fused = out.collect().toSeq
+      .sortWith((a, b) => byScoreDesc((a.getLong(0), a.getDouble(1)),
+        (b.getLong(0), b.getDouble(1))))
+      .take(limit)
+    val schema = StructType.fromDDL(s"doc_id bigint, $score double")
+    val enc = ExpressionEncoder(schema)
+    val toRow = enc.createSerializer()
+    new classic.Dataset[Row](spark.asInstanceOf[classic.SparkSession],
+      CommandResult(DataTypeUtils.toAttributes(schema),
+        legs.queryExecution.analyzed, legs.queryExecution.executedPlan,
+        fused.map(r => toRow(r).copy())), enc)
+  }
+
+  /** A full outer join of two (doc_id, value) legs on doc_id, on the
+    * driver: one row per matching pair, a missing side as None. */
+  private def fullOuter[A, B](l: Seq[(Long, A)], r: Seq[(Long, B)])
+      : Seq[(Long, Option[A], Option[B])] = {
+    val (lBy, rBy) = (l.groupBy(_._1), r.groupBy(_._1))
+    def side[V](m: Map[Long, Seq[(Long, V)]], id: Long): Seq[Option[V]] =
+      m.get(id).fold(Seq(Option.empty[V]))(_.map(x => Some(x._2)))
+    (l.map(_._1) ++ r.map(_._1)).distinct.flatMap(id =>
+      for (a <- side(lBy, id); b <- side(rBy, id)) yield (id, a, b))
+  }
+
+  /** Spark's `min`/`max` of a double column: NaN is the greatest
+    * value and −0.0 equals 0.0 (the first seen is kept on a tie). */
+  private def sqlBounds(xs: Seq[Double])
+      : (Option[java.lang.Double], Option[java.lang.Double]) = {
+    def pick(keep: Int => Boolean): Option[java.lang.Double] =
+      xs.reduceOption((a, b) =>
+        if (keep(SQLOrderingUtil.compareDoubles(b, a))) b else a)
+        .map(Double.box)
+    (pick(_ < 0), pick(_ > 0))
+  }
+
+  /** (score desc, doc_id) in Spark's double ordering. */
+  private def byScoreDesc(a: (Long, Double), b: (Long, Double)): Boolean = {
+    val c = SQLOrderingUtil.compareDoubles(b._2, a._2)
+    c < 0 || (c == 0 && a._1 < b._1)
+  }
+
+  /** Driver-side rows as a local relation — a projection over it
+    * folds on the driver with no job. */
+  private def local(spark: SparkSession, rows: Seq[Row], ddl: String): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType.fromDDL(ddl))
 
   /** s6: alpha-weighted RANKED fusion — Weaviate's `rankedFusion`
     * algorithm, the classic reciprocal-rank fusion (Cormack et al.
@@ -528,9 +644,13 @@ object HybridSearch {
   /** [[snippetsOf]] for a hit list the serve already COLLECTED (≤k
     * rows — the request/response boundary, so the ranking runs
     * exactly once): the hits' (doc_id, text) rows are read by one id
-    * filter and collected too, and the SAME windowing runs over the
-    * two driver-local relations — no ranking plan re-executes and no
-    * cache handle is left behind. */
+    * filter and collected too — the only Spark job of the render.
+    * Hits join their content on the driver, and the best window is
+    * scored per row over its own token array with the SAME
+    * [[bestWindow]] expression, as one projection over a local
+    * relation: Spark folds it on the driver, so the render runs no
+    * job past the content read and leaves no cache handle. Returns
+    * the rendered hits in hit order. */
   private[graft] def snippetsOfHits(corpus: DataFrame, hits: Seq[Row],
                                     schema: StructType, terms: Seq[String],
                                     window: Int = 10): DataFrame = {
@@ -539,22 +659,69 @@ object HybridSearch {
     val id = schema.fieldIndex("doc_id")
     val text = corpus.filter($"doc_id".isin(hits.map(_.getLong(id)): _*))
       .select($"doc_id", $"text")
-    val docs = spark.createDataFrame(text.collect().toSeq.asJava, text.schema)
-    windowed(tokenizedHits(docs), spark.createDataFrame(hits.asJava, schema),
-      terms, window)
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    // the hit ⋈ content join, on the driver: one row per hit with
+    // content, in hit order
+    val joined = hits.flatMap(h =>
+      text.get(h.getLong(id)).map(t => Row.fromSeq(h.toSeq :+ t)))
+    val keep = "doc_id" +: schema.fieldNames.toSeq.filterNot(_ == "doc_id")
+    val docs = spark.createDataFrame(joined.asJava,
+        schema.add("text", "string"))
+      .select(keep.map(col) :+ $"text" :+ tokensOf($"text"): _*)
+    // each row's own query-term hits as the (p, term) pairs the
+    // best-window expression scores, p 1-based
+    val hs = filter(
+      transform($"tok", (t, i) =>
+        struct((i + 1).cast("long").as("p"), t.as("term"))),
+      h => h("term").isin(terms: _*))
+    val best = docs.select(keep.map(col) :+ $"text" :+ $"tok" :+
+      bestWindow(hs, window).as("b"): _*)
+    rendered(best.select(keep.map(col) :+ $"text" :+ $"tok" :+
+        $"b.p".as("start_pos") :+ (-$"b.nt").cast("long").as("n_terms"): _*),
+      keep, window)
   }
 
   /** (doc_id, text, tok) of the hit documents. */
   private def tokenizedHits(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    docs.select($"doc_id", $"text",
-      regexp_extract_all(lower($"text"), lit(WordTokenPattern), lit(0))
-        .as("tok"))
+    docs.select($"doc_id", $"text", tokensOf($"text"))
   }
 
-  /** The snippet windowing itself: candidate starts are query-term
-    * hit positions; the best `window`-token span per doc maximizes
-    * (distinct terms, hits), earliest start on ties. */
+  /** The word-class token array of a text column, as `tok`. */
+  private def tokensOf(text: Column): Column =
+    regexp_extract_all(lower(text), lit(WordTokenPattern), lit(0)).as("tok")
+
+  /** The best `window`-token span of a document from its query-term
+    * hits `hs` (array of struct(p, term)): each hit start p scores the
+    * hits in [p, p + window) as (−distinct terms, −hits, p), and the
+    * least triple wins — most distinct terms, then most hits, then
+    * the earliest start. Null when the document has no hit. Shared by
+    * [[windowed]] (hits grouped per document) and [[snippetsOfHits]]
+    * (hits taken from each row's own token array). */
+  private def bestWindow(hs: Column, window: Int): Column =
+    array_min(transform(hs, h => {
+      val in = filter(hs, x => x("p") >= h("p") && x("p") < h("p") + window)
+      struct((-size(array_distinct(transform(in, _("term"))))).as("nt"),
+        (-size(in)).as("nh"), h("p").as("p"))
+    }))
+
+  /** A hit row's rendered columns from its best window (`start_pos`,
+    * `n_terms`, null without a hit): the content, and the snippet —
+    * the window's tokens, or the document's first `window` tokens
+    * with n_terms = 0 for a hit with no query term. */
+  private def rendered(docs: DataFrame, keep: Seq[String],
+                       window: Int): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.select(keep.map(col) ++ Seq($"text".as("content"),
+        coalesce($"start_pos", lit(1L)).as("start_pos"),
+        coalesce($"n_terms", lit(0L)).as("n_terms"),
+        concat_ws(" ", slice($"tok",
+          coalesce($"start_pos", lit(1L)).cast("int"),
+          lit(window))).as("snippet")): _*)
+  }
+
+  /** The snippet windowing of a lazy ranking (s10): candidate starts
+    * are query-term hit positions, grouped per document. */
   private def windowed(docs: DataFrame, ranked: DataFrame,
                        terms: Seq[String], window: Int): DataFrame = {
     import docs.sparkSession.implicits._
@@ -563,27 +730,15 @@ object HybridSearch {
       .filter($"col".isin(terms: _*))
       .select($"doc_id", ($"pos" + 1).cast("long").as("p"),
         $"col".as("term"))
-    // one group per doc: each hit start p scores the hits in
-    // [p, p + window) as (−distinct terms, −hits, p), and the least
-    // triple is the best window — array work within the row, so the
-    // grouping is the only exchange
+    // one group per doc; the best window is array work within the
+    // row, so the grouping is the only exchange
     val best = hits.groupBy($"doc_id")
       .agg(collect_list(struct($"p", $"term")).as("hs"))
-      .select($"doc_id", array_min(transform($"hs", h => {
-        val in = filter($"hs", x => x("p") >= h("p") && x("p") < h("p") + window)
-        struct((-size(array_distinct(transform(in, _("term"))))).as("nt"),
-          (-size(in)).as("nh"), h("p").as("p"))
-      })).as("b"))
+      .select($"doc_id", bestWindow($"hs", window).as("b"))
       .select($"doc_id", $"b.p".as("start_pos"),
         (-$"b.nt").cast("long").as("n_terms"))
-    val rendered = docs.join(best, Seq("doc_id"), "left")
-      .select($"doc_id", $"text".as("content"),
-        coalesce($"start_pos", lit(1L)).as("start_pos"),
-        coalesce($"n_terms", lit(0L)).as("n_terms"),
-        concat_ws(" ", slice($"tok",
-          coalesce($"start_pos", lit(1L)).cast("int"),
-          lit(window))).as("snippet"))
-    ranked.join(rendered, "doc_id")
+    ranked.join(rendered(docs.join(best, Seq("doc_id"), "left"),
+      Seq("doc_id"), window), "doc_id")
   }
 
   /** Misspelled probe terms the s11 driver query corrects (one

@@ -90,10 +90,16 @@ import graft.operators.{HybridSearch, Knn}
   *
   * Every serving method reshapes the loaded artifacts into the SAME
   * base/stats frames the scan path builds and calls the SAME scoring
-  * code (HybridSearch.scoreBm25 / scoreFielded / fuseRelative /
-  * fuseRanked), so served scores are bit-equal by construction —
-  * TextIndexSpec pins it, and s17/s18/s21/s22 oracle-gate the round
-  * trips end to end against the scan queries' own oracles.
+  * code (HybridSearch.scoreBm25 / scoreFielded, and the fusion score
+  * expressions HybridSearch.relativeScore / rankedScore), so served
+  * scores are bit-equal by construction — TextIndexSpec pins it, and
+  * s17/s18/s21/s22 oracle-gate the round trips end to end against
+  * the scan queries' own oracles. Every store-served hybrid ranking
+  * ([[hybridServe]], [[filteredHybridServe]], [[rerankServe]]) fuses
+  * through ONE step, HybridSearch.fuseCollected: both legs, each
+  * limited to its candidates, run in one action, and the ≤2×candidates
+  * rows fuse on the driver through those shared expressions
+  * (FusionSpec pins it equal to the scan path's Spark fusions).
   */
 object TextIndex {
 
@@ -1357,7 +1363,8 @@ object TextIndex {
     * `qvec` may carry MANY rows (the batch serve): the probe set is
     * the distinct union, so each query's own cells are always
     * included (per-query results are a superset of single-query
-    * pruning — recall only improves). Bounded collect: ≤ |cells|. */
+    * pruning — recall only improves). Bounded collect: ≤ nprobe cells
+    * per query row. */
   private def probedVectorRows(spark: SparkSession, path: String,
                                c: Commit, qvec: DataFrame,
                                cents: Seq[Seq[Double]],
@@ -1369,15 +1376,15 @@ object TextIndex {
       // the same first-max tie-break assign() writes cells with, so
       // a probe of a duplicated/tied centroid reads the cell the
       // rows actually landed in
+      // a projection per query row (no explode), so over a local
+      // relation of query vectors the probe folds on the driver
       val probed = qvec
-        .select(explode(slice(array_sort(zip_with(
+        .select(transform(slice(array_sort(zip_with(
           Knn.centroidScoresCol(spark,
             graft.functions.VectorFunctions.asDouble($"qv"), cents),
           sequence(lit(0), lit(cents.length - 1)),
-          (s, i) => Knn.probeKey(s, i))), 1, nprobe)).as("pr"))
-        .select($"pr"("i"))
-        .distinct()
-        .collect().map(_.getInt(0).toLong).toSeq
+          (s, i) => Knn.probeKey(s, i))), 1, nprobe), _("i")))
+        .collect().flatMap(_.getSeq[Int](0)).distinct.map(_.toLong).toSeq
       readArtifact(spark, path, "vectors", c, Some(probed))
     }
   }
@@ -1397,24 +1404,53 @@ object TextIndex {
   /** [[vectorServe]] at a commit the caller already resolved. */
   private[graft] def vectorServe(spark: SparkSession, path: String,
                                  c: Commit, queryTerms: Seq[String],
-                                 candidates: Int, nprobe: Int): DataFrame = {
+                                 candidates: Int, nprobe: Int): DataFrame =
+    vectorLeg(spark, path, c, queryTerms, candidates, nprobe, identity)
+
+  /** The vector leg over the live stored vectors `keep` leaves (the
+    * filtered serve's semi-join, else all), top-`candidates` by
+    * cosine to the query vector, which rides in as a literal. A
+    * keyword-only index answers an empty leg (fusion treats it as
+    * absent). */
+  private def vectorLeg(spark: SparkSession, path: String, c: Commit,
+                        queryTerms: Seq[String], candidates: Int,
+                        nprobe: Int, keep: DataFrame => DataFrame): DataFrame = {
+    import spark.implicits._
+    val cents = manifestOf(spark, path, c).cents
+    if (cents.isEmpty) return emptyVectorLeg(spark)
+    val qv = queryVector(spark, queryTerms)
+    val cells = probedVectorRows(spark, path, c, Seq(qv).toDF("qv"), cents,
+      nprobe)
+    keep(liveRows(cells, tombstonesOf(spark, path, c)))
+      .select($"doc_id",
+        graft.functions.VectorFunctions.cosineD($"v", lit(qv.toArray))
+          .as("v_score"))
+      .orderBy($"v_score".desc, $"doc_id").limit(candidates)
+  }
+
+  /** The raw poly-BoW query vector, computed by the registered
+    * `poly_bow` (the writer's and the oracle's hash) as a one-row
+    * projection over a local relation — folded on the driver, no
+    * job. */
+  private def queryVector(spark: SparkSession,
+                          queryTerms: Seq[String]): Seq[Double] = {
     import spark.implicits._
     graft.plans.GraftFunctions.ensureRegistered(spark)
-    val cents = manifestOf(spark, path, c).cents
-    val queryTok = array(queryTerms.map(lit): _*)
-    val qvec = spark.range(1)
-      .select(queryTok.as("tok"))
-      .select(expr("poly_bow(tok, 64)").as("qv"))
-    if (cents.isEmpty)
-      // keyword-only index: empty leg (fusion treats it as absent)
-      return spark.range(0).select($"id".as("doc_id"),
-        lit(0.0).as("v_score"))
-    val cells = probedVectorRows(spark, path, c, qvec, cents, nprobe)
-    liveRows(cells, tombstonesOf(spark, path, c))
-      .crossJoin(broadcast(qvec))
-      .select($"doc_id",
-        graft.functions.VectorFunctions.cosineD($"v", $"qv").as("v_score"))
-      .orderBy($"v_score".desc, $"doc_id").limit(candidates)
+    Seq(queryTerms).toDF("tok").select(expr("poly_bow(tok, 64)"))
+      .collect().head.getSeq[Double](0)
+  }
+
+  /** The (doc_id, v_score) leg of an index with no vectors — an empty
+    * local relation, so a union with it plans no scan. */
+  private def emptyVectorLeg(spark: SparkSession): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType.fromDDL("doc_id bigint, v_score double"))
+
+  /** The BM25 leg: the top-`candidates` of a scored base. */
+  private def keywordLeg(scored: DataFrame, candidates: Int): DataFrame = {
+    import scored.sparkSession.implicits._
+    scored.orderBy($"score".desc, $"doc_id").limit(candidates)
+      .select($"doc_id", $"score".as("kw_score"))
   }
 
   /** HYBRID search served FROM the persisted index — the reference's
@@ -1425,7 +1461,10 @@ object TextIndex {
     * expression the scan path runs (HybridSearch.fuseRelative /
     * fuseRanked — Weaviate's relativeScoreFusion and rankedFusion),
     * so store-served hybrid is bit-equal to the scan-path hybrid and
-    * s21/s24 reuse s3/s6's oracles verbatim. */
+    * s21/s24 reuse s3/s6's oracles verbatim. The legs run when this
+    * is called — one action for both, fused on the driver
+    * (HybridSearch.fuseCollected) — and the returned ≤`limit` rows
+    * collect with no further job. */
   def hybridServe(spark: SparkSession, path: String,
                   queryTerms: Seq[String], alpha: Double = 0.5,
                   limit: Int = 10, fusion: String = "relative",
@@ -1439,17 +1478,11 @@ object TextIndex {
   private[graft] def hybridServe(spark: SparkSession, path: String,
                                  c: Commit, queryTerms: Seq[String],
                                  alpha: Double, limit: Int, fusion: String,
-                                 candidates: Int, nprobe: Int): DataFrame = {
-    import spark.implicits._
-    require(fusion == "relative" || fusion == "ranked",
-      s"fusion must be 'relative' or 'ranked', got '$fusion'")
-    val kw = bm25Serve(spark, path, c, queryTerms)
-      .orderBy($"score".desc, $"doc_id").limit(candidates)
-      .select($"doc_id", $"score".as("kw_score"))
-    val vec = vectorServe(spark, path, c, queryTerms, candidates, nprobe)
-    if (fusion == "ranked") HybridSearch.fuseRanked(kw, vec, alpha, limit)
-    else HybridSearch.fuseRelative(kw, vec, alpha, limit)
-  }
+                                 candidates: Int, nprobe: Int): DataFrame =
+    HybridSearch.fuseCollected(
+      keywordLeg(bm25Serve(spark, path, c, queryTerms), candidates),
+      vectorServe(spark, path, c, queryTerms, candidates, nprobe),
+      alpha, limit, fusion)
 
   /** The reference's FULL serving signature from the store —
     * Search(query, alpha, limit, FILTERS) (retrieval/service.go:23-47
@@ -1464,7 +1497,11 @@ object TextIndex {
     * postings base — no corpus scan, no global-stats approximation.
     * Both legs then fuse through the scan path's shared fusion
     * expression, so the filtered store-serve is bit-equal to the
-    * scan pipeline over the filtered corpus (s25's oracle). */
+    * scan pipeline over the filtered corpus (s25's oracle). Like
+    * [[hybridServe]], the legs run when this is called, in the one
+    * action of HybridSearch.fuseCollected — the filtered doc set is
+    * part of that plan, not a cached frame, so the serve leaves no
+    * cache handle. */
   def filteredHybridServe(spark: SparkSession, path: String,
                           queryTerms: Seq[String],
                           filters: Map[String, String],
@@ -1473,25 +1510,20 @@ object TextIndex {
                           candidates: Int = Candidates,
                           nprobe: Int = Int.MaxValue): DataFrame = {
     import spark.implicits._
-    require(fusion == "relative" || fusion == "ranked",
-      s"fusion must be 'relative' or 'ranked', got '$fusion'")
-    graft.plans.GraftFunctions.ensureRegistered(spark)
     val c = commitOf(spark, path)
-    // the filtered doc set, persisted once per serve call: both legs
-    // and both stats aggregates read it
-    val fdocs = graft.Caches.persist(
-      filters.foldLeft(docsLive(spark, path, c)) {
+    // the filtered doc set: both legs and both stats aggregates read
+    // it, inside the one action that runs the legs
+    val fdocs = filters.foldLeft(docsLive(spark, path, c)) {
         case (df, (kc, v)) => df.filter(col(kc) === v)
-      }.select($"doc_id", $"dl"))
+      }.select($"doc_id", $"dl")
     val tfCols = queryTerms.zipWithIndex.map { case (t, i) =>
       coalesce(sum(when($"term" === t, $"tf")), lit(0L)).cast("double")
         .as(s"tf_$i")
     }
-    val base = graft.Caches.persist(
-      postingsFor(spark, path, queryTerms, c)
-        .join(fdocs.select($"doc_id"), Seq("doc_id"), "left_semi")
-        .groupBy($"doc_id", $"dl")
-        .agg(tfCols.head, tfCols.tail: _*))
+    val base = postingsFor(spark, path, queryTerms, c)
+      .join(fdocs.select($"doc_id"), Seq("doc_id"), "left_semi")
+      .groupBy($"doc_id", $"dl")
+      .agg(tfCols.head, tfCols.tail: _*)
     // filtered-corpus stats: exact integer-valued sums, so avg(dl)
     // over the filtered scan reproduces bit-for-bit
     val corpus = fdocs.agg(count(lit(1)).cast("double").as("n_docs"),
@@ -1499,31 +1531,12 @@ object TextIndex {
     val dfAggs = queryTerms.indices.map(i =>
       sum(when(col(s"tf_$i") > 0, 1.0).otherwise(0.0)).as(s"df_$i"))
     val stats = base.agg(dfAggs.head, dfAggs.tail: _*).crossJoin(corpus)
-    val kw = HybridSearch.scoreBm25(base, stats, queryTerms.size)
-      .orderBy($"score".desc, $"doc_id").limit(candidates)
-      .select($"doc_id", $"score".as("kw_score"))
-    val queryTok = array(queryTerms.map(lit): _*)
-    val qvec = spark.range(1)
-      .select(queryTok.as("tok"))
-      .select(expr("poly_bow(tok, 64)").as("qv"))
-    val cents = manifestOf(spark, path, c).cents
-    val vec =
-      if (cents.isEmpty)
-        // keyword-only index: empty leg (fusion treats it as absent —
-        // the vectorServe degrade, so a filtered serve on an
-        // indexStream-built index answers its BM25 leg instead of
-        // throwing on the missing vectors artifact)
-        spark.range(0).select($"id".as("doc_id"), lit(0.0).as("v_score"))
-      else
-        liveRows(probedVectorRows(spark, path, c, qvec, cents, nprobe),
-            tombstonesOf(spark, path, c))
-          .join(fdocs.select($"doc_id"), Seq("doc_id"), "left_semi")
-          .crossJoin(broadcast(qvec))
-          .select($"doc_id",
-            graft.functions.VectorFunctions.cosineD($"v", $"qv").as("v_score"))
-          .orderBy($"v_score".desc, $"doc_id").limit(candidates)
-    if (fusion == "ranked") HybridSearch.fuseRanked(kw, vec, alpha, limit)
-    else HybridSearch.fuseRelative(kw, vec, alpha, limit)
+    HybridSearch.fuseCollected(
+      keywordLeg(HybridSearch.scoreBm25(base, stats, queryTerms.size),
+        candidates),
+      vectorLeg(spark, path, c, queryTerms, candidates, nprobe,
+        _.join(fdocs.select($"doc_id"), Seq("doc_id"), "left_semi")),
+      alpha, limit, fusion)
   }
 
   /** Per-term live position lists of a phrase/proximity query,
@@ -1705,8 +1718,11 @@ object TextIndex {
     * pushdown on `content/` at that same commit (≤k rows read), then
     * the SHARED snippet windowing (HybridSearch.snippetsOfHits — best
     * `window`-token span of query-term coverage, head fallback for
-    * vector-only hits) runs over driver-local relations: no second
-    * ranking, no cache handle left behind. */
+    * vector-only hits) runs on the driver: the hits join their
+    * content there and the window scores as one projection over a
+    * local relation, which Spark folds with no job. The content read
+    * is the render's only Spark action; no second ranking, no cache
+    * handle left behind. */
   private[graft] def renderHits(spark: SparkSession, path: String, c: Commit,
                                 hits: Seq[Row],
                                 schema: org.apache.spark.sql.types.StructType,
@@ -1764,35 +1780,24 @@ object TextIndex {
     // routing through the hybrid fusion there would let vector-only
     // candidates (hybrid_score 0 via the full outer join) fill the
     // limit and be reranked above genuine keyword hits
-    val ranked0 =
+    val ranked =
       if (alpha > 0.0)
         hybridServe(spark, path, c, queryTerms, alpha, limit, fusion,
           candidates, nprobe)
-      else {
-        val kw = bm25Serve(spark, path, c, queryTerms)
-          .orderBy($"score".desc, $"doc_id").limit(candidates)
-          .select($"doc_id", $"score".as("kw_score"))
-        val emptyVec = spark.range(0)
-          .select($"id".as("doc_id"), lit(0.0).as("v_score"))
-        // the SHARED fusion expression with an absent vector leg —
-        // keyword docs only (the ranked form scores rank-reciprocal,
-        // the relative form min-max-normalized; both carry through
-        // as `hybrid_score` below)
-        if (fusion == "ranked")
-          HybridSearch.fuseRanked(kw, emptyVec, alpha, limit)
-        else HybridSearch.fuseRelative(kw, emptyVec, alpha, limit)
-      }
-    // fuseRanked names its fused column rrf_score; the rerank stage
-    // (and the returned schema) reads one canonical hybrid_score
-    val ranked = if (fusion == "ranked")
-        ranked0.withColumnRenamed("rrf_score", "hybrid_score")
-      else ranked0
+      else
+        // the SHARED fusion with an absent vector leg — keyword docs
+        // only (ranked scores rank-reciprocal, relative min-max-
+        // normalized; both carry through as `hybrid_score` below)
+        HybridSearch.fuseCollected(
+          keywordLeg(bm25Serve(spark, path, c, queryTerms), candidates),
+          emptyVectorLeg(spark), alpha, limit, fusion)
     // ranked ONCE: the ≤limit candidate rows, read for the ids AND
-    // the join as a driver-local relation
+    // the join as a driver-local relation; the ranked fusion's
+    // rrf_score reads as the one canonical hybrid_score
     val rows = ranked.collect().toSeq
-    val cands = spark.createDataFrame(rows.asJava, ranked.schema)
-    val id = ranked.schema.fieldIndex("doc_id")
-    val toks = contentForIds(spark, path, c, rows.map(_.getLong(id)))
+    val cands = spark.createDataFrame(rows.asJava,
+      StructType.fromDDL("doc_id bigint, hybrid_score double"))
+    val toks = contentForIds(spark, path, c, rows.map(_.getLong(0)))
       .select($"doc_id",
         regexp_extract_all(lower($"text"),
           lit(HybridSearch.WordTokenPattern), lit(0)).as("tok"))

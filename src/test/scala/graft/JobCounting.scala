@@ -1,22 +1,39 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Counts the Spark jobs a block of driver code submits, and names
   * them by call site (`parquet at TextIndex.scala:…` for a reader's
   * planning job, `collect at …` for an action). */
 trait JobCounting { this: SparkSpec =>
 
-  /** Job id and call site of every job start, in delivery order. */
+  /** Job id and call site of every job start, in delivery order. A job
+    * of a SQL execution is named by that execution's description —
+    * the call site of the action that started it — so the query-stage
+    * and broadcast jobs AQE submits from its own thread pool (whose
+    * own call site is Spark's `CompletableFuture`) name the action
+    * too. Any other job is named by its final stage. */
   final class JobIds extends SparkListener {
     private val starts =
       new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    private val executions =
+      new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        executions.put(s.executionId, s.description)
+      case _ =>
+    }
     override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val props = Option(e.properties)
+      def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
       // the short call site names the final stage; a job with no
       // stages carries it as its description
-      val site = e.stageInfos.sortBy(_.stageId).lastOption.map(_.name)
-        .orElse(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))))
+      val site = prop("spark.sql.execution.id")
+        .flatMap(id => Option(executions.get(id.toLong)))
+        .orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
+        .orElse(prop("spark.job.description"))
         .getOrElse("")
       starts.add(e.jobId -> site)
     }

@@ -174,4 +174,37 @@ class ServePathSpec extends SparkSpec with JobCounting {
     assert(!bm25At(c1).map(_.getAs[Long]("doc_id")).contains(4L))
     Caches.releaseAll()
   }
+
+  test("a warm hybrid serve runs at most 9 jobs: one ranking action, then the content read") {
+    val e = new GraftEngine(spark, corpus)
+    val p = indexOf(e, "graft-serve-nine")
+    val l = new JobIds
+    spark.sparkContext.addSparkListener(l)
+    try {
+      e.runSearchFromIndex(p, "hash join") // warm: the first serve compiles
+      val sites = jobSitesOf(l)(e.runSearchFromIndex(p, "hash join"))
+      assert(sites.size <= 9,
+        s"a hybrid serve ran ${sites.size} jobs: ${sites.mkString("; ")}")
+      // both legs rank in one SQL execution and the render's only
+      // execution is the content read: two actions in all
+      assert(sites.distinct.size <= 2,
+        s"a hybrid serve ran more than two actions: ${sites.mkString("; ")}")
+      assert(!sites.exists(_.contains("CompletableFuture")),
+        s"every job names the action that started it: ${sites.mkString("; ")}")
+    } finally spark.sparkContext.removeSparkListener(l)
+    Caches.releaseAll()
+  }
+
+  test("a filtered hybrid serve leaves no cache handle") {
+    val e = new GraftEngine(spark, corpus.withColumn("lang",
+      org.apache.spark.sql.functions.lit("en")))
+    val p = indexOf(e, "graft-serve-filtered")
+    Caches.releaseAll()
+    val tracked = Caches.trackedCount
+    val rows = e.searchFromIndex(p, "hash join",
+      filters = Map("lang" -> "en")).collect()
+    assert(rows.nonEmpty)
+    assert(Caches.trackedCount == tracked,
+      "a filtered serve must not leave a cache handle behind")
+  }
 }
